@@ -1209,3 +1209,100 @@ foreach %v
         return sorted(rows)
 
     assert run(4) == run(0)
+
+
+def test_bucket_state_records_width_and_rejects_a_changed_one():
+    """Bucket blobs carry the state_buckets width they were written
+    under; loading one under another width fails naming state_buckets
+    (trails would hash to other buckets and strand their state), and
+    blobs from before the width was recorded still load."""
+    import pickle
+
+    import pytest
+
+    from trck_spark.streaming import (
+        _BUCKET_STATE_VERSION,
+        _dump_bucket_state,
+        _load_bucket_state,
+    )
+
+    trails = {"u1": b"blob"}
+    blob = _dump_bucket_state(trails, {"u1": 5}, {}, 16)
+    assert _load_bucket_state(blob, 16) == (trails, {"u1": 5}, {})
+    with pytest.raises(ValueError, match="state_buckets=16.*state_buckets=8"):
+        _load_bucket_state(blob, 8)
+    # per-trail grouping (width 0) must not read a bucket blob either
+    with pytest.raises(ValueError, match="state_buckets"):
+        _load_bucket_state(blob, 0)
+    old = pickle.dumps({"bv": _BUCKET_STATE_VERSION, "t": trails})
+    assert _load_bucket_state(old, 8) == (trails, {}, {})
+    # a per-trail v2 blob is not a bucket blob
+    from trck_spark.streaming import _dump_state
+
+    assert _load_bucket_state(_dump_state({}, 1, None, None), 8) is None
+
+
+def test_resume_with_changed_bucket_count_raises(spark, tmp_path):
+    """A real checkpoint written at state_buckets=4, resumed at 8: the
+    query fails with the width mismatch instead of silently dropping
+    the carried trail state."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
+
+    from trck_spark.streaming import streaming_partials
+
+    src = tmp_path / "nb_src"
+    src.mkdir()
+    ckpt = str(tmp_path / "nb_ckpt")
+    users = [f"user{i}" for i in range(16)]
+
+    def write(name, t0, mtime):
+        pq.write_table(
+            pa.table(
+                {
+                    "uuid": users,
+                    "timestamp": [t0 + i for i in range(len(users))],
+                    "seq": [0] * len(users),
+                    "t": ["a"] * len(users),
+                }
+            ),
+            str(src / name),
+        )
+        _pin_mtime(src / name, mtime)
+
+    prog = """
+start ->
+    receive
+        t = "a" -> armed
+        * -> repeat
+armed ->
+    receive
+        t = "a" -> yield $twice, start
+"""
+
+    def run(n_buckets):
+        sdf = (
+            spark.readStream.schema(
+                "uuid string, timestamp long, seq long, t string"
+            )
+            .option("maxFilesPerTrigger", 1)
+            .parquet(str(src))
+        )
+        out = streaming_partials(
+            sdf, prog, uuid_col="uuid", ts_col="timestamp",
+            seq_col="seq", state_buckets=n_buckets,
+        )
+        q = (
+            out.writeStream.foreachBatch(lambda b, _i: b.collect())
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+
+    write("p0.parquet", 100, 1_700_000_000)
+    run(4)  # every user left the initial state: state in all buckets
+    write("p1.parquet", 200, 1_700_000_100)
+    with pytest.raises(Exception, match="state_buckets=4"):
+        run(8)

@@ -35,6 +35,7 @@ from trck_spark.output import format_output, results_to_dict
 from trck_spark.params import foreach_tuples
 from trck_spark.runner import TrckQuery
 from trck_spark.sideinputs import cnf_to_spark_condition
+from trck_spark.worker import drop_spark_zip_importers
 
 PARTIAL_SCHEMA = (
     "tuple_id long, var string, key binary, reg long, n long"
@@ -130,6 +131,7 @@ def _read_sidecar_part(task):
     level and self-contained so `_ts_hll_slice_plan` can ship it to
     executors as a plain parallelize task when a long segment chain
     would otherwise serialize the reads on the driver."""
+    drop_spark_zip_importers()
     import numpy as np
 
     from trck_spark.fsm.hll import HLL_M, _rle_decode_registers
@@ -180,7 +182,11 @@ def _worker_query(
     a batch run, or two streams), and keying on spec_json alone would
     reuse the wrong functions.  The cached TrckQuery holds a reference
     to its registry, so the id() in a live cache entry cannot be
-    recycled; ``initialize`` correctly re-runs per distinct registry."""
+    recycled; ``initialize`` correctly re-runs per distinct registry.
+
+    Every executor-side FSM entry point starts here, so this is also
+    where the per-task importer trim runs (trck_spark.worker)."""
+    drop_spark_zip_importers()
     key = (
         spec_json,
         None
@@ -359,6 +365,7 @@ class TrckResultSet:
 
         @pandas_udf("string")
         def display(keys):
+            drop_spark_zip_importers()
             return keys.map(
                 lambda b: tuple_to_display(bytes(b))
                 if b is not None
@@ -1244,6 +1251,7 @@ class TrckSparkEngine:
                         # (code, reg) cell max(packed) == the packed
                         # value carrying max(rank), so one pass over
                         # the raw ints needs no pre-aggregation
+                        drop_spark_zip_importers()
                         import numpy as np
                         import pandas as pd
 
@@ -1314,6 +1322,7 @@ class TrckSparkEngine:
                         if est * n_slots * HLL_M > cap_b:
 
                             def _merge_rr_blobs(pdf):
+                                drop_spark_zip_importers()
                                 import numpy as np
                                 import pandas as pd
 
@@ -1401,6 +1410,7 @@ class TrckSparkEngine:
                 # repeated per matched code, vectorized end to end.
                 # Sketch adds are idempotent, so cookies split across
                 # file-split partitions just max to the same registers
+                drop_spark_zip_importers()
                 import numpy as np
                 import pandas as pd
 

@@ -17,9 +17,8 @@ from __future__ import annotations
 from trck_spark.fsm.interpreter import (
     CompiledProgram,
     FsmRuntimeError,
-    Results,
-    State,
     _SAFETY_LIMIT,
+    do_yields,
 )
 from trck_spark.ir import (
     A_BREAK,
@@ -31,7 +30,7 @@ from trck_spark.ir import (
 )
 
 
-def _timeout_path(compiled, ri, ts, vals, pos, state, env, ev, do_yields):
+def _timeout_path(compiled, ri, ts, vals, pos, state, env, ev, dy):
     """Shared cold path: expired-window / empty-event handling.
 
     Mirrors interpreter.run_machine's else-branch exactly.
@@ -52,7 +51,7 @@ def _timeout_path(compiled, ri, ts, vals, pos, state, env, ev, do_yields):
         del state.outers[i:]
         orule = rules[oid]
         if orule.after_yields:
-            do_yields(orule.after_yields)
+            dy(orule.after_yields)
         kind, target = orule.after_action or (A_HERE, 0)
         if kind == A_QUIT:
             state.ri = -1
@@ -69,7 +68,7 @@ def _timeout_path(compiled, ri, ts, vals, pos, state, env, ev, do_yields):
         return target, pos, True, ts, "dispatch"
     # the rule's own after edge
     if rule.after_yields:
-        do_yields(rule.after_yields)
+        dy(rule.after_yields)
     kind, target = rule.after_action or (A_HERE, 0)
     if kind == A_QUIT:
         state.ri = -1
@@ -226,11 +225,11 @@ def build_matcher(compiled: CompiledProgram):
         for ci, cl in enumerate(rule.clauses):
             ns[f"_p_{ri}_{ci}"] = cl.pred
             ns[f"_y_{ri}_{ci}"] = (
-                lambda ylist=cl.yields: _do_yields(
+                lambda ylist=cl.yields: do_yields(
                     holder.results, holder.ev, ylist
                 )
             )
-    ns["_dy"] = lambda ylist: _do_yields(holder.results, holder.ev, ylist)
+    ns["_dy"] = lambda ylist: do_yields(holder.results, holder.ev, ylist)
     exec(compile(source, "<trck-codegen>", "exec"), ns)  # noqa: S102
     raw = ns["match_trail"]
 
@@ -251,24 +250,3 @@ def build_matcher(compiled: CompiledProgram):
     match_trail.source = source
     return match_trail
 
-
-def _do_yields(results: Results, ev, ylist) -> None:
-    from trck_spark.fsm.hll import hll_register_update
-    from trck_spark.fsm.tuples import encode_tuple, tuple_to_display
-
-    for dst, kind, terms in ylist:
-        if kind == "counter":
-            results.counters[dst] = results.counters.get(dst, 0) + 1
-        else:
-            items = [t(ev) for t in terms]
-            key = encode_tuple(items)
-            if kind in ("set", "multiset"):
-                d = results.sets.setdefault(dst, {})
-                d[key] = d.get(key, 0) + 1
-            else:
-                idx, rank = hll_register_update(
-                    tuple_to_display(key).encode()
-                )
-                d = results.hlls.setdefault(dst, {})
-                if d.get(idx, 0) < rank:
-                    d[idx] = rank

@@ -311,6 +311,46 @@ class _EvalCtx:
 
 _SAFETY_LIMIT = 10_000_000
 
+# Bounded per-process memos for non-counter yields: the same item
+# tuple (a trail's cookie, a popular field value) is yielded on many
+# events, and both its tuple encoding and its murmur register update
+# are pure Python.  Each memo is cleared whole when it reaches
+# _YIELD_MEMO_MAX entries.
+_YIELD_MEMO_MAX = 1 << 14
+_KEY_MEMO: dict = {}  # items tuple -> encode_tuple(items)
+_HLL_MEMO: dict = {}  # encoded key -> (register index, rank)
+
+
+def do_yields(results: Results, ev: _EvalCtx, ylist) -> None:
+    """Apply one clause's (or `after` edge's) yields to `results` —
+    shared by run_machine and the generated matcher (fsm/codegen.py)."""
+    for dst, kind, terms in ylist:
+        if kind == "counter":
+            results.counters[dst] = results.counters.get(dst, 0) + 1
+            continue
+        items = tuple([t(ev) for t in terms])
+        key = _KEY_MEMO.get(items)
+        if key is None:
+            if len(_KEY_MEMO) >= _YIELD_MEMO_MAX:
+                _KEY_MEMO.clear()
+            key = _KEY_MEMO[items] = encode_tuple(items)
+        if kind in ("set", "multiset"):
+            d = results.sets.setdefault(dst, {})
+            d[key] = d.get(key, 0) + 1
+            continue
+        # hll — hash the display form (see fsm/hll.py)
+        upd = _HLL_MEMO.get(key)
+        if upd is None:
+            if len(_HLL_MEMO) >= _YIELD_MEMO_MAX:
+                _HLL_MEMO.clear()
+            upd = _HLL_MEMO[key] = hll_register_update(
+                tuple_to_display(key).encode()
+            )
+        idx, rank = upd
+        d = results.hlls.setdefault(dst, {})
+        if d.get(idx, 0) < rank:
+            d[idx] = rank
+
 
 def run_machine(
     compiled: CompiledProgram,
@@ -342,24 +382,6 @@ def run_machine(
     arming = False  # False: resume at RULE_CONT; True: enter at RULE_START
     cur_ts = 0
     steps = 0
-
-    def do_yields(ylist, rule_for_ctx):
-        for dst, kind, terms in ylist:
-            if kind == "counter":
-                results.counters[dst] = results.counters.get(dst, 0) + 1
-            else:
-                items = [t(ev) for t in terms]
-                key = encode_tuple(items)
-                if kind in ("set", "multiset"):
-                    d = results.sets.setdefault(dst, {})
-                    d[key] = d.get(key, 0) + 1
-                else:  # hll — hash the display form (see fsm/hll.py)
-                    idx, rank = hll_register_update(
-                        tuple_to_display(key).encode()
-                    )
-                    d = results.hlls.setdefault(dst, {})
-                    if d.get(idx, 0) < rank:
-                        d[idx] = rank
 
     def do_transition(action, src_ri):
         """Returns (new_ri, advance). Raises _Stop for quit."""
@@ -447,7 +469,7 @@ def run_machine(
                 if matched.yields:
                     ev.ts = ts
                     ev.vals = vals
-                    do_yields(matched.yields, ri)
+                    do_yields(results, ev, matched.yields)
                 kind, _t = matched.action
                 if kind == A_REPEAT:
                     pos += 1
@@ -479,7 +501,7 @@ def run_machine(
                 del state.outers[i:]
                 orule = rules[oid]
                 if orule.after_yields:
-                    do_yields(orule.after_yields, oid)
+                    do_yields(results, ev, orule.after_yields)
                 action = orule.after_action or (A_HERE, 0)
                 kind, _t = action
                 if kind == A_QUIT:
@@ -507,7 +529,7 @@ def run_machine(
 
             # the rule's own `after` edge (or the implicit one)
             if rule.after_yields:
-                do_yields(rule.after_yields, ri)
+                do_yields(results, ev, rule.after_yields)
             action = rule.after_action or (A_HERE, 0)
             kind, _t = action
             if kind == A_QUIT:

@@ -28,6 +28,8 @@ import json
 import os
 import re
 
+from trck_spark.worker import drop_spark_zip_importers
+
 MANIFEST = "_trailstore.json"
 
 
@@ -135,6 +137,7 @@ def _hll_rr_expr(uuid_col: str):
     # would stringify them beyond pyspark's inference
     @pandas_udf("int", PandasUDFType.SCALAR)
     def _rr(u):
+        drop_spark_zip_importers()
         import pandas as pd
 
         from trck_spark.fsm.hll import hll_rr_from_uuids
@@ -542,6 +545,7 @@ def _field_hll_rollups(
         pairs = exploded.select("u", "p.f", "p.c").distinct()
 
         def _updates(batches):
+            drop_spark_zip_importers()
             import pandas as pd
 
             from trck_spark.fsm.hll import (
@@ -693,6 +697,7 @@ def _write_hll_slices(
     )
 
     def _fold(batches):
+        drop_spark_zip_importers()
         import numpy as np
         import pandas as pd
 
@@ -740,6 +745,7 @@ def _write_hll_slices(
     )
 
     def _merge(pdf):
+        drop_spark_zip_importers()
         import numpy as np
         import pandas as pd
 

@@ -38,7 +38,7 @@ from trck_spark.fsm.interpreter import (
     State,
     dedup_consecutive,
     finalize_needed,
-    run_machine,
+    get_matcher,
 )
 
 STREAM_PARTIAL_SCHEMA = "uuid string, " + PARTIAL_SCHEMA
@@ -57,6 +57,7 @@ STREAM_END_TS = (1 << 63) - 1
 _STATE_VERSION = 2
 
 # Versioned BUCKET state blob (r12 secondary grouping): {"bv": 3,
+# "nb": state_buckets width (absent in older blobs),
 # "t": {skey: v2 trail blob}, "dl": {skey: deadline_ms},
 # "pt": {skey: last_data_ms}} — one blob per hash(uuid)%N bucket, each
 # trail's entry the unchanged v2 per-trail layout.  Distinguished from
@@ -124,6 +125,41 @@ def _dump_state(machine_states, last_ts, eff, prev_event,
             v: np.array(sorted(t), "<i4").tobytes()
             for v, t in by_var.items()
         }
+    return pickle.dumps(out)
+
+
+def _load_bucket_state(raw: bytes, n_buckets: int):
+    """bucket blob -> (trails, dl, pt), or None when ``raw`` is a
+    per-trail (v2/legacy) blob.  Raises ValueError when the blob was
+    written under a different ``state_buckets`` width: trails would
+    now hash to other buckets and their state would be stranded.
+    Blobs written before the width was recorded load unchecked."""
+    data = pickle.loads(raw)
+    if not (isinstance(data, dict) and "bv" in data):
+        return None
+    if data["bv"] != _BUCKET_STATE_VERSION:
+        raise ValueError(
+            f"streaming bucket-state version {data['bv']!r} is newer "
+            f"than this build supports ({_BUCKET_STATE_VERSION}); "
+            "upgrade trck_spark or restart from a fresh checkpoint"
+        )
+    nb = data.get("nb")
+    if nb is not None and nb != n_buckets:
+        raise ValueError(
+            f"streaming checkpoint was written with state_buckets={nb}"
+            f", this query runs with state_buckets={n_buckets}; resume "
+            f"with state_buckets={nb} or restart from a fresh checkpoint"
+        )
+    return data["t"], data.get("dl") or {}, data.get("pt") or {}
+
+
+def _dump_bucket_state(trails: dict, dl: dict, pt: dict,
+                       n_buckets: int) -> bytes:
+    out: dict = {"bv": _BUCKET_STATE_VERSION, "nb": n_buckets, "t": trails}
+    if dl:
+        out["dl"] = dl
+    if pt:
+        out["pt"] = pt
     return pickle.dumps(out)
 
 
@@ -256,7 +292,7 @@ def _stream_prune_meta(q, fields: list) -> tuple:
     states match.  The step then runs ONE machine per (projection,
     state) group instead of one per grid tuple — at a 100-value grid
     with a handful of values per trail-batch that is a ~20x cut in
-    run_machine calls.
+    matcher calls.
 
     Returns ("off",) | ("fast", field_index) | ("generic", {field:
     index}): "fast" is the single-scalar-var special case where the
@@ -684,10 +720,14 @@ def streaming_partials(
                 n_buckets = 32
             n_buckets = max(32, n_buckets)
     bucketed = bool(n_buckets) and int(n_buckets) > 0
+    # stamped into every bucket blob: a resume under a different width
+    # would hash trails to other buckets and strand their state
+    n_buckets = int(n_buckets) if bucketed else 0
 
     def step(key, pdf_iter, state: "GroupState") -> Iterator[Any]:
         q, tuples_w = _worker_query(spec_json, fn_registry)
         entrypoint = q.compiled.entrypoint
+        match = get_matcher(q.compiled)
         n_tuples = len(tuples_w) if tuples_w is not None else 1
 
         # ---- bucket state: {skey: v2 trail blob} + per-trail timer
@@ -700,18 +740,9 @@ def streaming_partials(
         pt: dict = {}  # processing-time last-data stamp (ms) per trail
         if state.exists:
             raw0 = bytes(state.get[0])
-            data = pickle.loads(raw0)
-            if isinstance(data, dict) and "bv" in data:
-                if data["bv"] != _BUCKET_STATE_VERSION:
-                    raise ValueError(
-                        f"streaming bucket-state version {data['bv']!r}"
-                        " is newer than this build supports "
-                        f"({_BUCKET_STATE_VERSION}); upgrade trck_spark"
-                        " or restart from a fresh checkpoint"
-                    )
-                trails = data["t"]
-                dl = data.get("dl") or {}
-                pt = data.get("pt") or {}
+            loaded = _load_bucket_state(raw0, n_buckets)
+            if loaded is not None:
+                trails, dl, pt = loaded
             else:
                 # pre-bucketing checkpoint (per-trail grouping mode):
                 # the whole blob is ONE v2/legacy trail keyed by the
@@ -779,7 +810,7 @@ def streaming_partials(
                         if tuples_w is not None
                         else q.base_env
                     )
-                    run_machine(
+                    match(
                         q.compiled, [SENTINEL], mstate, res, env, cookie
                     )
                     if not res.is_zero():
@@ -953,13 +984,13 @@ def streaming_partials(
                     else q.base_env
                 )
                 res = Results()
-                aborted = run_machine(
+                aborted = match(
                     q.compiled, events, mstate, res, env, cookie
                 )
                 if finalize and not aborted and finalize_needed(
                     mstate, entrypoint
                 ):
-                    run_machine(
+                    match(
                         q.compiled, [SENTINEL], mstate, res, env, cookie
                     )
                 new_st = (
@@ -1112,12 +1143,9 @@ def streaming_partials(
 
         # ---- store bucket state + arm the bucket timer ---------------
         if trails:
-            out_state: dict = {"bv": _BUCKET_STATE_VERSION, "t": trails}
-            if dl:
-                out_state["dl"] = dl
-            if pt:
-                out_state["pt"] = pt
-            state.update((bytearray(pickle.dumps(out_state)),))
+            state.update(
+                (bytearray(_dump_bucket_state(trails, dl, pt, n_buckets)),)
+            )
             if finalize_after_ms > 0:
                 state.setTimeoutDuration(finalize_after_ms)
             elif use_event_time:
