@@ -20,26 +20,14 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    from trck_spark.pipeline.queries import pipeline_queries
     from trck_spark.queries import spark_queries
 
-    out = dict(spark_queries())
-    try:
-        from trck_spark.pipeline.queries import pipeline_queries
-
-        out.update(pipeline_queries())
-    except ImportError:
-        pass
-    return out
+    return {**spark_queries(), **pipeline_queries()}
 
 
 def oracle_sql() -> dict[str, str]:
+    from trck_spark.pipeline.queries import pipeline_oracles
     from trck_spark.queries import oracle_sqls
 
-    out = dict(oracle_sqls())
-    try:
-        from trck_spark.pipeline.queries import pipeline_oracles
-
-        out.update(pipeline_oracles())
-    except ImportError:
-        pass
-    return out
+    return {**oracle_sqls(), **pipeline_oracles()}

@@ -5,8 +5,8 @@ trails * (occurring + 1) — one run per occurring value plus ONE shared
 run for every non-occurring tuple (the projection-key cache,
 runner.trail_results; reference match_traildb.c:596-744).  With pruning
 disabled the count is exactly trails * grid_size, and the results are
-identical either way.  bench.py's b1_fsm_path row reports the same
-fsm_runs_per_trail telemetry at the 20M-event scale.
+identical either way.  perfbench's traced `fsm_trails` runs report the
+same telemetry as `fsm.runs_per_trail`.
 """
 
 from __future__ import annotations

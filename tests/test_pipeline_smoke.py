@@ -66,258 +66,6 @@ def test_ivf_recall(spark):
     assert recall >= 0.5, f"IVF recall too low: {recall}"
 
 
-def test_multimodal_decode_stub():
-    from trck_spark.pipeline.multimodal import decode_image
-
-    import pytest
-
-    w, h, c = decode_image(b"x" * 100, fake=True)
-    assert (w, h, c) == (101, 221, 3)
-    try:
-        import PIL  # noqa: F401
-
-        has_pil = True
-    except ImportError:
-        has_pil = False
-    if not has_pil:
-        # strict mode surfaces the missing optional dep...
-        with pytest.raises(NotImplementedError):
-            decode_image(b"xx", strict=True)
-        # ...default mode warns and falls back to the deterministic fake
-        with pytest.warns(RuntimeWarning):
-            assert decode_image(b"x" * 100) == (101, 221, 3)
-
-
-def test_multimodal_decode_real_pil():
-    """Real decode path: PIL round-trip on a generated PNG (skipped when
-    pillow is not installed — the container default)."""
-    import pytest
-
-    PIL_Image = pytest.importorskip("PIL.Image")
-    import io
-
-    from trck_spark.pipeline.multimodal import decode_image
-
-    buf = io.BytesIO()
-    PIL_Image.new("RGB", (17, 9)).save(buf, format="PNG")
-    assert decode_image(buf.getvalue()) == (17, 9, 3)
-
-
-def test_multimodal_decode_audio_stub():
-    from trck_spark.pipeline.multimodal import decode_audio
-
-    import pytest
-
-    assert decode_audio(b"x" * 100, fake=True) == (16_000, 50, 1)
-    try:
-        import soundfile  # noqa: F401
-
-        has_sf = True
-    except ImportError:
-        has_sf = False
-    if not has_sf:
-        with pytest.raises(NotImplementedError):
-            decode_audio(b"xx", strict=True)
-        with pytest.warns(RuntimeWarning):
-            assert decode_audio(b"x" * 100) == (16_000, 50, 1)
-
-
-def test_multimodal_decode_audio_real():
-    """Real decode path: soundfile round-trip on a generated WAV
-    (skipped when soundfile is not installed — the container default)."""
-    import pytest
-
-    soundfile = pytest.importorskip("soundfile")
-    import io
-
-    import numpy as np
-
-    from trck_spark.pipeline.multimodal import decode_audio
-
-    buf = io.BytesIO()
-    soundfile.write(
-        buf, np.zeros((480, 2), dtype=np.int16), 48_000, format="WAV"
-    )
-    assert decode_audio(buf.getvalue()) == (48_000, 480, 2)
-
-
-def test_multimodal_decode_video_stub():
-    import hashlib
-
-    import pytest
-
-    from trck_spark.pipeline.multimodal import decode_video_frames
-
-    blob = bytes(range(200))  # 200 bytes, frame_bytes=64 -> 3 frames
-    frames = list(decode_video_frames(blob, 64, 2, fake=True))
-    fps = 200 % 30 + 1
-    assert frames == [
-        (0, 0, hashlib.md5(blob[0:64]).hexdigest()),
-        (2, 2000 // fps, hashlib.md5(blob[128:192]).hexdigest()),
-    ]
-    try:
-        import av  # noqa: F401
-
-        has_av = True
-    except ImportError:
-        has_av = False
-    if not has_av:
-        with pytest.raises(NotImplementedError):
-            list(decode_video_frames(b"xx", strict=True))
-        with pytest.warns(RuntimeWarning):
-            assert list(decode_video_frames(blob, 64, 2)) == frames
-
-
-def test_multimodal_decode_video_real():
-    """Real decode path: PyAV round-trip on a generated container
-    (skipped when PyAV is not installed — the container default)."""
-    import pytest
-
-    av = pytest.importorskip("av")
-    import io
-
-    import numpy as np
-
-    from trck_spark.pipeline.multimodal import decode_video_frames
-
-    buf = io.BytesIO()
-    with av.open(buf, "w", format="mp4") as out:
-        stream = out.add_stream("mpeg4", rate=10)
-        stream.width, stream.height = 32, 32
-        for _ in range(6):
-            frame = av.VideoFrame.from_ndarray(
-                np.zeros((32, 32, 3), dtype=np.uint8), format="rgb24"
-            )
-            for packet in stream.encode(frame):
-                out.mux(packet)
-        for packet in stream.encode():
-            out.mux(packet)
-    frames = list(decode_video_frames(buf.getvalue(), stride=2))
-    assert [idx for idx, _ts, _h in frames] == [0, 2, 4]
-
-
-# ---- stdlib real-decode tier: real bytes, zero optional deps, never
-# skipped (the PIL/soundfile/PyAV round-trips above skip in wheel-less
-# environments, which left the real paths without a CI signal)
-
-
-def test_decode_image_stdlib_png():
-    """A REAL PNG (stdlib zlib encoder, CRC-correct) must decode to its
-    true dimensions via whichever tier is active — PIL when installed,
-    the stdlib header parser otherwise — never the byte-length fake."""
-    import struct
-    import zlib
-
-    from trck_spark.pipeline.multimodal import (
-        _parse_image_header, decode_image,
-    )
-
-    def chunk(tag, data):
-        return (
-            struct.pack(">I", len(data)) + tag + data
-            + struct.pack(">I", zlib.crc32(tag + data))
-        )
-
-    w, h = 17, 9
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)  # 8-bit RGB
-    raw = b"".join(b"\x00" + b"\x10" * (3 * w) for _ in range(h))
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    assert decode_image(png) == (17, 9, 3)
-    assert _parse_image_header(png) == (17, 9, 3)
-    # GIF + BMP + JPEG headers through the parser directly
-    gif = b"GIF89a" + struct.pack("<HH", 320, 200) + b"\x00" * 10
-    assert _parse_image_header(gif) == (320, 200, 3)
-    bmp = (
-        b"BM" + b"\x00" * 16
-        + struct.pack("<ii", 64, -48) + b"\x01\x00"
-        + struct.pack("<H", 24) + b"\x00" * 8
-    )
-    assert _parse_image_header(bmp) == (64, 48, 3)
-    jpg = (
-        b"\xff\xd8"
-        + b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-        + b"\xff\xc0" + struct.pack(">H", 17) + b"\x08"
-        + struct.pack(">HH", 9, 17) + b"\x03" + b"\x00" * 9
-        + b"\xff\xd9"
-    )
-    assert _parse_image_header(jpg) == (17, 9, 3)
-    # 0xFF fill/padding bytes before a marker are legal (ISO 10918-1
-    # B.1.1.2): the walker must skip them, not read a bogus seg length
-    jpg_pad = (
-        b"\xff\xd8"
-        + b"\xff\xff\xff"  # padding run before the APP0 marker
-        + b"\xe0" + struct.pack(">H", 16) + b"JFIF\x00" + b"\x00" * 9
-        + b"\xff\xff"      # padding before SOF0 too
-        + b"\xc0" + struct.pack(">H", 17) + b"\x08"
-        + struct.pack(">HH", 9, 17) + b"\x03" + b"\x00" * 9
-        + b"\xff\xd9"
-    )
-    assert _parse_image_header(jpg_pad) == (17, 9, 3)
-    # a truncated all-padding tail must return None, not index out
-    assert _parse_image_header(b"\xff\xd8" + b"\xff" * 20) is None
-
-
-def test_decode_audio_stdlib_wav():
-    """A REAL PCM WAV (stdlib wave encoder) must decode to its true
-    (rate, frames, channels) via soundfile or the stdlib wave tier."""
-    import io
-    import wave
-
-    from trck_spark.pipeline.multimodal import decode_audio
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as f:
-        f.setnchannels(2)
-        f.setsampwidth(2)
-        f.setframerate(48_000)
-        f.writeframes(b"\x00\x00" * 2 * 480)
-    assert decode_audio(buf.getvalue()) == (48_000, 480, 2)
-
-
-def test_decode_video_stdlib_y4m():
-    """A REAL YUV4MPEG2 stream (hand-assembled, spec-exact) must demux
-    to per-frame digests of its raw planes via PyAV or the stdlib y4m
-    tier.  Digests are asserted against independently computed md5 of
-    the known payloads."""
-    import hashlib
-
-    from trck_spark.pipeline.multimodal import (
-        _y4m_frames, decode_video_frames,
-    )
-
-    w, h, n_frames = 4, 4, 5
-    frame_size = w * h + 2 * (w // 2) * (h // 2)  # 420: 24 bytes
-    header = b"YUV4MPEG2 W4 H4 F25:1 Ip A1:1 C420jpeg\n"
-    payloads = [
-        bytes((i * 37 + j) % 256 for j in range(frame_size))
-        for i in range(n_frames)
-    ]
-    blob = header + b"".join(b"FRAME\n" + p for p in payloads)
-
-    expect = [
-        (i, i * 1000 // 25, hashlib.md5(payloads[i]).hexdigest())
-        for i in range(0, n_frames, 2)
-    ]
-    assert list(_y4m_frames(blob, stride=2)) == expect
-    try:
-        import av  # noqa: F401
-    except ImportError:
-        # stdlib tier active: full digest equality on real bytes
-        assert list(decode_video_frames(blob, stride=2)) == expect
-    else:
-        # PyAV tier: same frames sampled; digests may differ only if
-        # PyAV pads plane strides (it doesn't at these sizes)
-        got = list(decode_video_frames(blob, stride=2))
-        assert [(i, ts) for i, ts, _d in got] == [
-            (i, ts) for i, ts, _d in expect
-        ]
-
-
 def test_ngram_hot_shingle_cap(spark, tmp_path):
     """A shingle shared by every doc must not explode into O(n^2)
     candidate pairs: with df > max_shingle_df it is dropped from counts

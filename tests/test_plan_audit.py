@@ -6,7 +6,7 @@ blanket invariants on the whole `queries()` registry at once:
 
 1. No row-at-a-time Python UDF anywhere (`BatchEvalPython`): Python is
    allowed only as Arrow-batched pandas stages (mapInPandas /
-   FlatMapGroupsInPandas — the FSM and multimodal paths).
+   FlatMapGroupsInPandas — the FSM path).
 2. No cartesian product without an explicit broadcast bound: a
    `CartesianProduct` node means a cross join fell off the broadcast
    path, which is O(n^2) shuffle at scale.  (BroadcastNestedLoopJoin

@@ -60,15 +60,6 @@ def test_cnf_filter_pushes_down(spark, tmp_path):
     assert "unused_wide_column" not in read_schema
 
 
-def test_small_dim_join_broadcasts(spark):
-    from trck_spark.queries import q_revenue_by_segment
-
-    plan = _formatted_plan(
-        q_revenue_by_segment(spark, "/root/testdata/sf0.001")
-    )
-    assert "BroadcastHashJoin" in plan
-
-
 def test_fast_path_has_no_python_operator(spark):
     """Simple counter programs must compile to a plan with no Python
     evaluation operator (mapInPandas would show as MapInPandas /

@@ -293,6 +293,78 @@ def test_event_time_watermark_finalization(spark, tmp_path):
     assert got == {("u1", "$bounces"): 1}
 
 
+def test_event_time_deadline_equal_to_watermark_does_not_finalize(
+    spark, tmp_path
+):
+    """A trail whose finalization deadline equals the batch's watermark
+    has not timed out yet (Spark's event-time timer fires only once the
+    watermark passes the deadline): the idle sweep must leave it for a
+    later batch.  One state bucket, so the idle trail's sweep runs in
+    every batch that carries another trail's events."""
+    from datetime import datetime, timezone
+
+    from trck_spark.streaming import streaming_partials
+
+    t0, gap = 1_000_000, 60
+    src = tmp_path / "wm_eq_src"
+    src.mkdir(parents=True)
+    schema = "uuid string, timestamp long, seq long, event_type string"
+    # a: u1 arms the bounce window and goes idle; deadline t0 + gap
+    # b: watermark for the next batch becomes exactly t0 + gap
+    # c: the boundary batch (watermark == u1's deadline)
+    # d: watermark passes the deadline
+    for i, (uuid, ts) in enumerate(
+        [("u1", t0), ("u2", t0 + gap), ("u3", t0 + gap + 1),
+         ("u4", t0 + 1000)]
+    ):
+        path = src / f"{'abcd'[i]}.parquet"
+        spark.createDataFrame(
+            [(uuid, ts, 0, "view" if uuid == "u1" else "click")], schema
+        ).coalesce(1).write.parquet(str(path))
+        _pin_mtime(path, 1_700_000_000 + i)
+
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(str(src / "*.parquet"))
+    )
+    parts = streaming_partials(
+        stream,
+        PROG_BOUNCE_STREAM,
+        uuid_col="uuid",
+        ts_col="timestamp",
+        seq_col="seq",
+        finalize_idle_gap=gap,
+        state_buckets=1,
+    )
+    by_batch: dict = {}
+
+    def sink(batch_df, batch_id):
+        by_batch[batch_id] = [
+            (r["uuid"], r["var"], r["n"]) for r in batch_df.collect()
+        ]
+
+    q = parts.writeStream.foreachBatch(sink).trigger(
+        availableNow=True
+    ).start()
+    q.awaitTermination(300)
+
+    deadline = datetime.fromtimestamp(t0 + gap, timezone.utc).strftime(
+        "%Y-%m-%dT%H:%M:%S.000Z"
+    )
+    boundary = [
+        p["batchId"]
+        for p in q.recentProgress
+        if p["numInputRows"] > 0
+        and p["eventTime"].get("watermark") == deadline
+    ]
+    assert len(boundary) == 1, q.recentProgress
+    assert ("u1", "$bounces", 1) not in by_batch[boundary[0]]
+    fired = [b for b, rows in by_batch.items()
+             if ("u1", "$bounces", 1) in rows]
+    assert len(fired) == 1 and fired[0] > boundary[0], by_batch
+
+
 def test_streaming_split_fixture_watermark(spark, tmp_path):
     """The bounces split fixture (after-edge dependent) must produce the
     reference results with WATERMARK-driven finalization — no explicit

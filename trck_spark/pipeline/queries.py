@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from trck_spark.pipeline import curation, dedup, multimodal, similarity, text
+from trck_spark.pipeline import curation, dedup, similarity, text
 
 
 def q_dedup_exact(spark, sf_dir):
@@ -88,18 +88,6 @@ def q_token_stats(spark, sf_dir):
 
 def q_doc_fingerprint(spark, sf_dir):
     return text.doc_fingerprint(spark, sf_dir)
-
-
-def q_image_metadata(spark, sf_dir):
-    return multimodal.image_metadata(spark, sf_dir)
-
-
-def q_audio_frame_sample(spark, sf_dir):
-    return multimodal.audio_frame_sample(spark, sf_dir)
-
-
-def q_video_frame_sample(spark, sf_dir):
-    return multimodal.video_frame_sample(spark, sf_dir)
 
 
 def q_ngram_containment_pairs(spark, sf_dir):
@@ -322,9 +310,6 @@ def pipeline_queries() -> dict:
     return {
         "dedup_exact": q_dedup_exact,
         "text_metrics": q_text_metrics,
-        "image_metadata": q_image_metadata,
-        "audio_frame_sample": q_audio_frame_sample,
-        "video_frame_sample": q_video_frame_sample,
         "split_pack": q_split_pack,
         "quota_sample": q_quota_sample,
         "mixture_sample": q_mixture_sample,
@@ -886,11 +871,6 @@ ORDER BY shared.doc_id
 
 
 def pipeline_oracles() -> dict:
-    from trck_spark.pipeline.multimodal import (
-        audio_frame_sample_oracle_sql,
-        image_metadata_oracle_sql,
-        video_frame_sample_oracle_sql,
-    )
     from trck_spark.pipeline.dedup import (
         dup_span_stats_oracle_sql,
         incremental_dedup_oracle_sql,
@@ -944,7 +924,4 @@ def pipeline_oracles() -> dict:
         "contamination_check": _CONTAMINATION_ORACLE,
         "ann_cosine_methods": ann_cosine_methods_oracle_sql(),
         "knn_label_vote": _KNN_ORACLE,
-        "image_metadata": image_metadata_oracle_sql(),
-        "audio_frame_sample": audio_frame_sample_oracle_sql(),
-        "video_frame_sample": video_frame_sample_oracle_sql(),
     }

@@ -3,8 +3,7 @@
 Each query is a (spark_fn, oracle_sql) pair: the Spark side runs through
 the engine (FSM path) or pure Catalyst; the oracle is ANSI SQL DuckDB runs
 on the same parquet for the driver's correctness gate.  Column names and
-types are aligned on both sides (exact decimal sums for money columns cast
-back to double, so parallel FP summation order can't cause hash drift).
+types are aligned on both sides.
 
 The trck-semantics queries map the events table onto the reference data
 model: uuid := user_id, timestamp := epoch seconds (trck's native unit),
@@ -48,10 +47,6 @@ def load_events(spark, sf_dir: str):
         .withColumn("timestamp", ts_col.cast(LongType()))
         .withColumn("user", F.col("user_id").cast("string"))
     )
-
-
-def _t(name: str, sf_dir: str):
-    return f"{sf_dir}/{name}.parquet"
 
 
 # ------------------------------------------------- trck-engine programs
@@ -335,9 +330,7 @@ def q_trck_count_by_type_store(spark, sf_dir):
       covered middle segment from its rollup, boundary segments scanned.
 
     Same union shape on the oracle side, so one hash checks both tiers.
-    Constituent plans stay individually benchmarked (bench.py rows
-    trck_count_by_type_store_ts + the gate's b1_store_segmented bar) and
-    plan-shape-asserted in tests/test_rollup.py."""
+    Constituent plans stay plan-shape-asserted in tests/test_rollup.py."""
     from pyspark.sql import functions as F
 
     engine = _ENGINES.get(id(spark))
@@ -378,24 +371,6 @@ foreach %t
             event_type = %t, timestamp >= {TS_BOUND[0]}, timestamp < {TS_BOUND[1]} -> yield cookie to ^uniq, repeat
             * -> repeat
 """
-
-
-def q_trck_count_by_type_store_ts(spark, sf_dir):
-    """PROG_COUNT_BY_TYPE_TS through the same SEGMENTED TrailStore: the
-    query carries a timestamp bound that fully covers the middle
-    segment, so the engine's time-scoped rollup tier
-    (engine._run_ts_scoped_rollup) answers the covered segment from its
-    manifest rollup with zero scan and scans only the two boundary
-    segments — the incremental-counter shape that never rescans
-    history at 100 TB.  Hash-checked against the same DuckDB aggregate
-    over the flat parquet."""
-    engine = _ENGINES.get(id(spark))
-    if engine is None:
-        engine = _ENGINES[id(spark)] = TrckSparkEngine(spark)
-    return engine.run(
-        _segmented_events_store(spark, sf_dir), PROG_COUNT_BY_TYPE_TS,
-        uuid_col="uuid", ts_col="timestamp", seq_col="event_id",
-    ).counters_df()
 
 
 def q_trck_funnel(spark, sf_dir):
@@ -981,96 +956,7 @@ WHERE e.event_type = 'click' AND NOT EXISTS (
 }
 
 
-# ------------------------------------------------- relational analytics
-
-
-def q_lineitem_pricing(spark, sf_dir):
-    """TPC-H Q1-shaped aggregation (exact decimal sums -> double)."""
-    from pyspark.sql import functions as F
-
-    li = spark.read.parquet(_t("lineitem", sf_dir))
-    dec = lambda c: F.col(c).cast("decimal(18,2)")
-    return (
-        li.groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(dec("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(dec("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-        .orderBy("l_returnflag", "l_linestatus")
-    )
-
-
-def q_revenue_by_segment(spark, sf_dir):
-    """Join orders to the customer dim and aggregate.
-
-    No broadcast hint: customer scales with SF (at 100 TB it is ~10^9
-    rows, far past the broadcast limit), so the join is left to AQE —
-    it broadcasts the pruned 2-column dim when it is actually small and
-    shuffle-joins otherwise."""
-    from pyspark.sql import functions as F
-
-    cust = spark.read.parquet(_t("customer", sf_dir)).select(
-        "c_custkey", "c_mktsegment"
-    )
-    orders = spark.read.parquet(_t("orders", sf_dir))
-    return (
-        orders.join(
-            cust,
-            orders.o_custkey == cust.c_custkey,
-        )
-        .groupBy("c_mktsegment")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("revenue"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-def q_top_customers(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    orders = spark.read.parquet(_t("orders", sf_dir))
-    return (
-        orders.groupBy("o_custkey")
-        .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("revenue")
-        )
-        .orderBy(F.desc("revenue"), "o_custkey")
-        .limit(10)
-        .select(F.col("o_custkey").alias("custkey"), "revenue")
-    )
-
-
-def q_props_json_stats(spark, sf_dir):
-    """Semi-structured extraction: parse the events.props JSON column and
-    aggregate the extracted field per event type.  get_json_object stays
-    a JVM expression (no UDF); the integer sum is exact so the DuckDB
-    oracle (json_extract_string) matches bit-for-bit; the double column
-    goes through an exact decimal sum like the other money columns."""
-    from pyspark.sql import functions as F
-
-    ev = spark.read.parquet(_t("events", sf_dir))
-    return (
-        ev.select(
-            "event_type",
-            F.get_json_object("props", "$.k").cast("long").alias("k"),
-            F.col("value").cast("decimal(18,2)").alias("v"),
-        )
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("k").alias("sum_k"),
-            F.max("k").alias("max_k"),
-            F.sum("v").cast("double").alias("sum_value"),
-        )
-        .orderBy("event_type")
-    )
+# ------------------------------------------------- relational session features
 
 
 def q_session_features(spark, sf_dir):
@@ -1162,33 +1048,6 @@ SELECT user_id, sess_idx::BIGINT AS sess_idx,
          AS has_purchase
 FROM s GROUP BY 1, 2 ORDER BY 1, 2
 """,
-    "props_json_stats": """
-SELECT event_type,
-       count(*)::BIGINT AS n,
-       sum(json_extract_string(props, '$.k')::BIGINT)::BIGINT AS sum_k,
-       max(json_extract_string(props, '$.k')::BIGINT)::BIGINT AS max_k,
-       sum(value::DECIMAL(18,2))::DOUBLE AS sum_value
-FROM events GROUP BY 1 ORDER BY 1
-""",
-    "lineitem_pricing": """
-SELECT l_returnflag, l_linestatus,
-       sum(l_quantity::DECIMAL(18,2))::DOUBLE AS sum_qty,
-       sum(l_extendedprice::DECIMAL(18,2))::DOUBLE AS sum_base_price,
-       count(*)::BIGINT AS count_order
-FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2
-""",
-    "revenue_by_segment": """
-SELECT c_mktsegment,
-       sum(o_totalprice::DECIMAL(18,2))::DOUBLE AS revenue,
-       count(*)::BIGINT AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY 1 ORDER BY 1
-""",
-    "top_customers": """
-SELECT o_custkey AS custkey,
-       sum(o_totalprice::DECIMAL(18,2))::DOUBLE AS revenue
-FROM orders GROUP BY 1 ORDER BY revenue DESC, custkey LIMIT 10
-""",
 }
 
 
@@ -1217,10 +1076,6 @@ def spark_queries() -> dict:
         "trck_window_file": q_trck_window_file,
         "trck_exclude": q_trck_exclude,
         "trck_cnf_filter": q_trck_cnf_filter,
-        "lineitem_pricing": q_lineitem_pricing,
-        "revenue_by_segment": q_revenue_by_segment,
-        "top_customers": q_top_customers,
-        "props_json_stats": q_props_json_stats,
         "session_features": q_session_features,
     }
     return out

@@ -32,10 +32,9 @@ def get_spark(app_name: str = "trck_spark", shuffle_partitions: int | None = Non
         .config("spark.sql.parquet.columnarReaderBatchSize", "16384")
         # single-JVM local mode: driver heap IS executor memory.  The
         # LIBRARY default stays 16g so the session starts on modest
-        # hosts / memory-cgroup-limited containers; the 160M-event
-        # bench gate (whose 32 concurrent window sorts OOMed 16g
-        # nondeterministically) runs in its own subprocess with
-        # SPARK_DRIVER_MEM=48g set by bench.py
+        # hosts / memory-cgroup-limited containers; set
+        # SPARK_DRIVER_MEM for larger heaps (32 concurrent window sorts
+        # over 160M events OOMed 16g nondeterministically)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         # ContextCleaner only forces a GC every 30min by default; a
         # long benchmarking/ETL session churning big window sorts

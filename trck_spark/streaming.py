@@ -320,39 +320,6 @@ def _stream_prune_meta(q, fields: list) -> tuple:
     return ("generic", need)
 
 
-def _profiled_step(step):
-    """Debug wrapper (TRCK_SPARK_STEP_PROFILE=1): cProfile the stateful
-    step inside each python worker, dumping cumulative stats to
-    /tmp/trck_step_prof_<pid>.txt every 20k groups."""
-    box: dict = {}  # profiler created lazily IN the worker (unpicklable)
-
-    def wrapped(key, pdf_iter, state):
-        import cProfile
-        import io
-        import pstats
-
-        if "pr" not in box:
-            box["pr"] = cProfile.Profile()
-            box["n"] = 0
-        pr = box["pr"]
-        pr.enable()
-        try:
-            out = list(step(key, pdf_iter, state))
-        finally:
-            pr.disable()
-        box["n"] += 1
-        if box["n"] % 5000 == 0:
-            buf = io.StringIO()
-            pstats.Stats(pr, stream=buf).sort_stats(
-                "cumulative"
-            ).print_stats(25)
-            with open(f"/tmp/trck_step_prof_{os.getpid()}.txt", "w") as f:
-                f.write(f"groups={box['n']}\n" + buf.getvalue())
-        yield from out
-
-    return wrapped
-
-
 _ROW_COLS = ["uuid", "tuple_id", "var", "key", "reg", "n"]
 
 
@@ -1118,14 +1085,16 @@ def streaming_partials(
 
         # ---- idle-trail finalization sweep: trails whose deadline
         # passed and that received no events this batch (per-trail
-        # analog of the per-group timer the pre-bucketing step used)
+        # analog of the per-group timer the pre-bucketing step used;
+        # like Spark's event-time timer, a deadline equal to the
+        # watermark has not passed yet)
         if trails and (use_event_time or now_ms is not None):
             if use_event_time:
                 wm = state.getCurrentWatermarkMs()
                 due = [
                     sk
                     for sk, d in dl.items()
-                    if d <= wm and sk not in per_trail
+                    if d < wm and sk not in per_trail
                 ]
             else:
                 due = [
@@ -1182,8 +1151,6 @@ def streaming_partials(
             if window_df is not None
             else ["__uuid"]
         )
-    if os.environ.get("TRCK_SPARK_STEP_PROFILE"):
-        step = _profiled_step(step)  # noqa: F811 — debug-only wrapper
     out = df.groupBy(*group_cols).applyInPandasWithState(
         step,
         outputStructType=STREAM_PARTIAL_SCHEMA,
