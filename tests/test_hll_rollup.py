@@ -1,6 +1,6 @@
 """HLL sketch rollups (VERDICT r08 item 1): the store writes
 per-(field, value) cookie sketches into the manifest
-(store._field_hll_rollups), merges them across segments by register max
+(store._field_hll_rollups / the sliced sidecar), merges them across segments by register max
 (_merge_segment_manifests), and the engine answers
 ``yield cookie to ^h`` uniques queries from them with ZERO Spark work
 (TrckLocalResultSet — no DataFrame, no job, nothing to scan by
@@ -14,6 +14,9 @@ from __future__ import annotations
 import json
 import os
 import random
+import re
+
+import pytest
 
 PROG = """
 foreach %v
@@ -416,35 +419,6 @@ def test_hll_ts_scoped_single_store(spark, tmp_path):
     assert out_n == out_p
 
 
-def test_hll_ts_scoped_zone_map_less_part_is_boundary(spark, tmp_path):
-    """A part with sketches but no ts_min/ts_max (pre-zone-map manifest
-    revision) must be SCANNED, never skipped — the sketch analog of the
-    ADVICE r08 high-severity legacy-manifest hazard."""
-    from trck_spark.engine import TrckLocalResultSet
-    from trck_spark.store import MANIFEST, open_trail_store
-
-    path = str(tmp_path / "legacy")
-    _time_sliced_store(spark, path)
-    seg_manifest = os.path.join(path, "segment_0000", MANIFEST)
-    with open(seg_manifest) as f:
-        m = json.load(f)
-    m.pop("ts_min", None)
-    m.pop("ts_max", None)
-    with open(seg_manifest, "w") as f:
-        json.dump(m, f)
-    store = open_trail_store(spark, path)
-    # middle segment would be covered by its zone map — without one it
-    # must join the boundary scan instead
-    rs, out = _run(spark, store, TS_PROG.format(lo=50, hi=250))
-    assert isinstance(rs, TrckLocalResultSet)
-    assert rs._ts_scope["boundary_parts"] == [0, 1, 2]
-    _, out_fsm = _run(
-        spark, store, TS_PROG.format(lo=50, hi=250),
-        env={"TRCK_SPARK_NO_ROLLUP": "1", "TRCK_SPARK_NO_FASTPATH": "1"},
-    )
-    assert out == out_fsm
-
-
 EXPLICIT_PROG = """
 foreach %v in @grid
     start ->
@@ -613,33 +587,6 @@ def test_hll_gridless_valueset_ts_scoped(spark, tmp_path):
     assert out == out_fsm
 
 
-def test_ensure_rollups_backfills_hll(spark, tmp_path):
-    from trck_spark.engine import TrckLocalResultSet
-    from trck_spark.store import (
-        MANIFEST,
-        ensure_rollups,
-        open_trail_store,
-        write_trail_store,
-    )
-
-    path = str(tmp_path / "old")
-    write_trail_store(
-        spark.createDataFrame(_rows(12, 3), SCHEMA), path, seq_col="seq"
-    )
-    mp = os.path.join(path, MANIFEST)
-    with open(mp) as f:
-        m = json.load(f)
-    golden = m.pop("hll_rollups")
-    with open(mp, "w") as f:
-        json.dump(m, f)
-    ensure_rollups(spark, path)
-    with open(mp) as f:
-        m2 = json.load(f)
-    assert m2["hll_rollups"] == golden
-    rs, _ = _run(spark, open_trail_store(spark, path))
-    assert isinstance(rs, TrckLocalResultSet)
-
-
 def test_hll_rr_column_written_and_jvm_boundary_plan(spark, tmp_path):
     """Round 10/11: stores persist the packed (register << 6 | rank)
     of each row's cookie (__hll_rr, store._hll_rr_expr), and a
@@ -647,7 +594,7 @@ def test_hll_rr_column_written_and_jvm_boundary_plan(spark, tmp_path):
     register-blob fold (scope["boundary_plan"] == "rr_fold": JVM
     filter+projection, per-partition Arrow scatter-max, codes x
     partitions blobs to the driver) with results byte-identical to
-    the legacy Python murmur fold and the FSM path."""
+    the FSM path."""
     from trck_spark.store import read_manifest
 
     path = str(tmp_path / "rrseg")
@@ -658,48 +605,6 @@ def test_hll_rr_column_written_and_jvm_boundary_plan(spark, tmp_path):
     prog = TS_PROG.format(lo=50, hi=250)
     rs, out = _run(spark, store, prog)
     assert rs._ts_scope.get("boundary_plan") == "rr_fold"
-    # legacy layout (no materialized column): same wire hex
-    legacy_path = str(tmp_path / "legacyseg")
-    os.environ["TRCK_SPARK_NO_HLL_RR"] = "1"
-    try:
-        legacy = _time_sliced_store(spark, legacy_path)
-    finally:
-        del os.environ["TRCK_SPARK_NO_HLL_RR"]
-    assert read_manifest(legacy_path)["hll_rr_col"] is None
-    assert "__hll_rr" not in legacy.columns
-    rs_l, out_l = _run(spark, legacy, prog)
-    assert rs_l._ts_scope.get("boundary_plan") is None
-    assert out == out_l
-    _, out_fsm = _run(
-        spark, store, prog,
-        env={"TRCK_SPARK_NO_ROLLUP": "1", "TRCK_SPARK_NO_FASTPATH": "1"},
-    )
-    assert out == out_fsm
-
-
-def test_hll_rr_mixed_segments_fall_back(spark, tmp_path):
-    """A boundary that includes a legacy segment (no __hll_rr column)
-    must take the Python fold for the whole boundary — never a
-    null-filled union — and still match the FSM path."""
-    from trck_spark.store import append_trail_store
-
-    path = str(tmp_path / "mixedseg")
-    rows = _time_rows()
-    bounds = [0, 100, 200, 300]
-    for i, (lo, hi) in enumerate(zip(bounds, bounds[1:])):
-        part = [r for r in rows if lo <= r[1] < hi]
-        if i == 2:  # newest segment written by an older build
-            os.environ["TRCK_SPARK_NO_HLL_RR"] = "1"
-        try:
-            store = append_trail_store(
-                spark.createDataFrame(part, SCHEMA), path, seq_col="seq"
-            )
-        finally:
-            os.environ.pop("TRCK_SPARK_NO_HLL_RR", None)
-    prog = TS_PROG.format(lo=50, hi=250)
-    rs, out = _run(spark, store, prog)
-    assert rs._ts_scope["boundary_parts"] == [0, 2]
-    assert rs._ts_scope.get("boundary_plan") is None  # legacy fold
     _, out_fsm = _run(
         spark, store, prog,
         env={"TRCK_SPARK_NO_ROLLUP": "1", "TRCK_SPARK_NO_FASTPATH": "1"},
@@ -807,89 +712,6 @@ def test_hll_sliced_sidecar_compacted_store(spark, tmp_path):
     assert out_c == out_f
 
 
-def test_ensure_rollups_backfills_sliced_sidecar(spark, tmp_path):
-    """Round 11 continuation: ensure_rollups retro-writes the sliced
-    sketch sidecar for an r10-layout store (persisted __hll_rr column,
-    no sidecar) in place — one scan per part, no data rewrite — and
-    the backfilled store's ts-bounded uniques query engages the slice
-    plan with results byte-identical to the FSM path.  A pre-r10
-    store (no register column) is left alone: the sidecar is only
-    consulted on the rr_fold plan, so writing one would be dead
-    bytes."""
-    from trck_spark.engine import TrckLocalResultSet
-    from trck_spark.store import (
-        MANIFEST, ensure_rollups, open_trail_store, read_manifest,
-        write_trail_store,
-    )
-
-    path = str(tmp_path / "r10seg")
-    _time_sliced_store(spark, path)
-    # simulate the r10 cache: strip the sidecar meta + files from the
-    # base and every segment (the column stays in the data)
-    part_dirs = [path] + [
-        os.path.join(path, s)
-        for s in read_manifest(path).get("segments", [])
-    ]
-    golden_rollups = {}
-    for d in part_dirs:
-        mp = os.path.join(d, MANIFEST)
-        with open(mp) as f:
-            m = json.load(f)
-        golden_rollups[d] = m["hll_rollups"]
-        sl = m.pop("hll_slices")
-        for meta in sl.values():
-            fp = os.path.join(d, meta["file"])
-            if os.path.exists(fp):
-                import shutil
-
-                shutil.rmtree(fp)
-        with open(mp, "w") as f:
-            json.dump(m, f)
-    ensure_rollups(spark, path)
-    for d in part_dirs:
-        m2 = read_manifest(d)
-        assert "t" in (m2.get("hll_slices") or {}), (d, m2.get("hll_slices"))
-        sl = m2["hll_slices"]["t"]
-        assert sl["n"] >= 2 and len(sl["bounds"]) == sl["n"] + 1
-        assert os.path.exists(os.path.join(d, sl["file"]))
-        # existing sketch rollups are kept, not recomputed
-        assert m2["hll_rollups"] == golden_rollups[d]
-    store = open_trail_store(spark, path)
-    prog = TS_PROG.format(lo=50, hi=250)
-    rs, out = _run(spark, store, prog)
-    assert isinstance(rs, TrckLocalResultSet)
-    assert rs._ts_scope.get("boundary_plan") == "rr_fold"
-    assert rs._ts_scope.get("slices_covered"), rs._ts_scope
-    _, out_fsm = _run(
-        spark, store, prog,
-        env={"TRCK_SPARK_NO_ROLLUP": "1", "TRCK_SPARK_NO_FASTPATH": "1"},
-    )
-    assert out == out_fsm
-
-    # pre-r10 layout: no persisted register column -> no sidecar write
-    nor_path = str(tmp_path / "norr")
-    os.environ["TRCK_SPARK_NO_HLL_RR"] = "1"
-    try:
-        write_trail_store(
-            spark.createDataFrame(_time_rows(), SCHEMA), nor_path,
-            seq_col="seq",
-        )
-    finally:
-        del os.environ["TRCK_SPARK_NO_HLL_RR"]
-    mp = os.path.join(nor_path, MANIFEST)
-    with open(mp) as f:
-        m = json.load(f)
-    m.pop("hll_slices", None)
-    with open(mp, "w") as f:
-        json.dump(m, f)
-    ensure_rollups(spark, nor_path)
-    m3 = read_manifest(nor_path)
-    assert "hll_slices" not in m3
-    from trck_spark.store import HLL_SLICE_FILE
-
-    assert not os.path.exists(os.path.join(nor_path, HLL_SLICE_FILE))
-
-
 def test_rr_fold_driver_merge_cap(spark, tmp_path):
     """VERDICT r11 item 2 (bounded driver merge): when the estimated
     collect (streams x codes x 16 KiB) exceeds the cap, the boundary
@@ -985,41 +807,59 @@ def test_sidecar_parallel_reads_match_serial(spark, tmp_path):
     assert out == out_fsm
 
 
-def test_ensure_rollups_missing_rr_column_converges(spark, tmp_path):
-    """ADVICE r11 (store.py): a manifest that claims hll_rr_col while
-    the table data lacks the column used to leave need_slices true
-    forever — every session re-opened the table and rewrote the
-    manifest as a perpetual no-op retry.  ensure_rollups now persists
-    hll_slices = {} (the always-present write_trail_store key) so
-    presence checks converge: the second call must return without
-    touching the manifest."""
+
+FSM_ENV = {"TRCK_SPARK_NO_ROLLUP": "1", "TRCK_SPARK_NO_FASTPATH": "1"}
+
+# manifest edits that fabricate a store written in an older layout:
+# (part directory, edit)
+OLDER_LAYOUTS = {
+    # the base predates the write-time count rollups
+    "no_rollups": ("", lambda m: m.pop("rollups")),
+    # a segment predates the zone maps: a tier that took the missing
+    # ts_min for an empty part would drop its events (ADVICE r08)
+    "no_zone_map": (
+        "segment_0000", lambda m: (m.pop("ts_min"), m.pop("ts_max"))
+    ),
+    # a segment predates the packed __hll_rr register column
+    "no_register_column": (
+        "segment_0001", lambda m: m.update(hll_rr_col=None)
+    ),
+}
+
+
+@pytest.mark.parametrize("layout", sorted(OLDER_LAYOUTS))
+def test_older_layout_raises_until_compacted(spark, tmp_path, layout):
+    """A store whose base or segment manifest lacks a key
+    write_trail_store writes still opens, but every query on it —
+    tiers and FSM path alike — raises a ValueError naming
+    ``--compact``; compact_trail_store rewrites it in the current
+    layout, whose tier answer equals the FSM path's on the intact
+    store and on the compacted one."""
+    from trck_spark.engine import TrckLocalResultSet
     from trck_spark.store import (
-        MANIFEST, ensure_rollups, read_manifest, write_trail_store,
+        MANIFEST, compact_trail_store, open_trail_store,
     )
 
-    path = str(tmp_path / "norrcol")
-    os.environ["TRCK_SPARK_NO_HLL_RR"] = "1"
-    try:
-        write_trail_store(
-            spark.createDataFrame(_time_rows(), SCHEMA), path,
-            seq_col="seq",
-        )
-    finally:
-        del os.environ["TRCK_SPARK_NO_HLL_RR"]
-    mp = os.path.join(path, MANIFEST)
+    path = str(tmp_path / "old")
+    store = _time_sliced_store(spark, path)
+    prog = TS_PROG.format(lo=50, hi=250)
+    _, want = _run(spark, store, prog, env=FSM_ENV)
+    part, edit = OLDER_LAYOUTS[layout]
+    mp = os.path.join(path, part, MANIFEST)
     with open(mp) as f:
         m = json.load(f)
-    # simulate the drifted cache: manifest claims the column, data
-    # lacks it, sidecar key absent
-    m["hll_rr_col"] = "__hll_rr"
-    m.pop("hll_slices", None)
+    edit(m)
     with open(mp, "w") as f:
         json.dump(m, f)
-
-    m1 = ensure_rollups(spark, path)
-    assert m1.get("hll_slices") == {}
-    assert read_manifest(path).get("hll_slices") == {}
-    mtime1 = os.path.getmtime(mp)
-    m2 = ensure_rollups(spark, path)  # converged: early return
-    assert m2.get("hll_slices") == {}
-    assert os.path.getmtime(mp) == mtime1
+    old = open_trail_store(spark, path)
+    for env in ({}, FSM_ENV):
+        with pytest.raises(
+            ValueError, match=re.escape(f"--compact {path} DEST")
+        ):
+            _run(spark, old, prog, env=env)
+    comp = compact_trail_store(spark, path, str(tmp_path / "new"))
+    rs, out = _run(spark, comp, prog)
+    assert isinstance(rs, TrckLocalResultSet)
+    assert out == want
+    _, out_fsm = _run(spark, comp, prog, env=FSM_ENV)
+    assert out_fsm == want

@@ -1,7 +1,7 @@
 """TrailStore write-time rollup answering implicit-foreach counters
 (VERDICT r06 item 4): the store aggregates (dictionary code, count) per
-field at WRITE time (store.py _field_rollups), and engine.run answers
-the B1-shaped query from the manifest with ZERO scan — gated on
+field at WRITE time (store._write_stats_and_rollups), and engine.run
+answers the B1-shaped query from the manifest with ZERO scan — gated on
 ts_unique (dedup provably a no-op) and on rollup_weights (the program
 counts every matching event exactly once).  Every test cross-checks the
 rollup answer against the FSM path and the scan-based compiled path on
@@ -136,21 +136,6 @@ def test_rollup_gated_off_on_unsafe_shapes(spark, tmp_path):
     )
     assert out2 == out2_fsm
     assert out2 != out  # the steal clause really changes counts
-
-
-def test_ensure_rollups_upgrades_old_manifest(spark, tmp_path):
-    from trck_spark.store import MANIFEST, ensure_rollups, read_manifest
-
-    store = _store(spark, tmp_path, _rows())
-    path = str(tmp_path / "s")
-    m = read_manifest(path)
-    want = m.pop("rollups")
-    m["version"] = 2
-    with open(os.path.join(path, MANIFEST), "w") as f:
-        json.dump(m, f)
-    upgraded = ensure_rollups(spark, path)
-    assert upgraded["rollups"] == want
-    assert read_manifest(path)["rollups"] == want
 
 
 PROG_EXPLICIT = """
@@ -357,34 +342,6 @@ def test_engine_auto_db_col_on_segmented(spark, tmp_path):
     # copy is a NEW db and survives -> 2.  A merged dedup scope (no db
     # col) would give 1.
     assert out == {"$n": 2}
-
-
-def test_ensure_rollups_on_segmented_store(spark, tmp_path):
-    """ADVICE r07: ensure_rollups on a store WITH segments must not
-    crash on the code-stripped union; it upgrades base + every segment
-    in place so the merged manifest regains the rollups."""
-    from trck_spark.store import (
-        MANIFEST, ensure_rollups, open_trail_store, read_manifest,
-    )
-
-    path, store = _seg_store(spark, tmp_path, "segsroll")
-    # simulate pre-v3 parts: strip rollups everywhere
-    for sub in [path] + [
-        os.path.join(path, s) for s in read_manifest(path)["segments"]
-    ]:
-        m = read_manifest(sub)
-        m.pop("rollups", None)
-        m["version"] = 2
-        with open(os.path.join(sub, MANIFEST), "w") as f:
-            json.dump(m, f)
-    assert open_trail_store(spark, path)._trailstore_manifest[
-        "rollups"
-    ] == {}
-    ensure_rollups(spark, path)  # must not raise AnalysisException
-    reopened = open_trail_store(spark, path)
-    assert reopened._trailstore_manifest["rollups"]["t"] == [0, 3, 2, 1, 1]
-    out, plan = _run(spark, reopened, PROG)
-    assert "FileScan" not in plan and "Scan parquet" not in plan
 
 
 def _ts_seg_store(spark, tmp_path, name="tsegs"):
@@ -760,101 +717,86 @@ def test_ts_scoped_grid_on_compacted_appended_store(spark, tmp_path):
     }
 
 
-def test_ts_scoped_rollup_legacy_part_without_zone_map(spark, tmp_path):
-    """ADVICE r08 (high): a manifest written before the zone maps existed
-    carries rollups (the tier's gates pass) but no ts_min/ts_max.  Such
-    a part must be SCANNED as boundary, never skipped as 'empty' — the
-    pre-fix engine silently dropped every in-bound event in it."""
-    import re as _re
+def _strip_zone_map(path: str) -> None:
+    """Fabricate a segment written before the zone maps existed: its
+    manifest keeps the rollups (the tier's gates pass) but loses
+    ts_min/ts_max."""
+    from trck_spark.store import MANIFEST
 
-    from trck_spark.store import MANIFEST, ensure_rollups, open_trail_store
-
-    path, _ = _ts_seg_store(spark, tmp_path, "tslegacy")
-    # simulate the legacy middle segment: strip its zone map in place
     seg_manifest = os.path.join(path, "segment_0000", MANIFEST)
     with open(seg_manifest) as f:
         sm = json.load(f)
-    assert sm["rollups"]  # gates still pass
+    assert sm["rollups"]
     del sm["ts_min"], sm["ts_max"]
     with open(seg_manifest, "w") as f:
         json.dump(sm, f)
+
+
+FSM_ENV = {"TRCK_SPARK_NO_ROLLUP": "1", "TRCK_SPARK_NO_FASTPATH": "1"}
+
+
+def test_ts_scoped_rollup_legacy_part_without_zone_map(spark, tmp_path):
+    """ADVICE r08 (high): a segment without a zone map must never be
+    taken for empty — the pre-fix engine silently dropped every
+    in-bound event in it.  Such a store now raises, naming
+    ``--compact``, on the rollup tier and the FSM path alike; its
+    compacted copy answers the bounded counter exactly."""
+    import pytest
+
+    from trck_spark.store import compact_trail_store, open_trail_store
+
+    path, _ = _ts_seg_store(spark, tmp_path, "tslegacy")
+    _strip_zone_map(path)
     store = open_trail_store(spark, path)
-    assert store._trailstore_manifest["parts"][1]["ts_min"] is None
+    for env in (None, FSM_ENV):
+        with pytest.raises(ValueError, match="--compact"):
+            _run(spark, store, PROG_TS, env)
 
-    # bound [150, 350) FULLY covers the legacy segment B [200, 260]:
-    # without the fix its 3 events vanish from the answer
-    from trck_spark.engine import TrckSparkEngine
-
-    rs = TrckSparkEngine(spark).run(
-        store, PROG_TS, uuid_col="uuid", ts_col="timestamp",
-        seq_col="seq",
-    )
-    out = rs.collect_json()
-    out_fsm, _ = _run(spark, store, PROG_TS, {"TRCK_SPARK_NO_FASTPATH": "1"})
+    # bound [150, 350) FULLY covers the stripped segment B [200, 260]:
+    # dropping it would lose its 3 events
+    comp = compact_trail_store(spark, path, str(tmp_path / "tslegacy_c"))
+    out, _ = _run(spark, comp, PROG_TS)
+    out_fsm, _ = _run(spark, comp, PROG_TS, FSM_ENV)
     assert out == out_fsm
     assert {r["%v"]: r["$n"] for r in out} == {
         "": 0, "a": 2, "b": 2, "c": 1, "d": 0
     }
-    # the legacy part was scanned (boundary), not skipped
-    scanned = rs.counters_df().inputFiles()
-    assert any("segment_0000" in f for f in scanned), scanned
-
-    # ensure_rollups backfills the zone map in place; pruning restored
-    ensure_rollups(spark, path)
-    with open(seg_manifest) as f:
-        sm2 = json.load(f)
-    assert (sm2["ts_min"], sm2["ts_max"]) == (200, 260)
-    store2 = open_trail_store(spark, path)
-    rs2 = TrckSparkEngine(spark).run(
-        store2, PROG_TS, uuid_col="uuid", ts_col="timestamp",
-        seq_col="seq",
-    )
-    assert rs2.collect_json() == out
-    scanned2 = rs2.counters_df().inputFiles()
-    assert not any("segment_0000" in f for f in scanned2), scanned2
-    # base (part A) and segment_0001 (part C) stay boundary
-    assert any("segment_0001" in f for f in scanned2), scanned2
-    assert any(
-        _re.search(r"tslegacy/[^/]+\.parquet$", f) for f in scanned2
-    ), scanned2
 
 
 def test_ts_scoped_explicit_grid_legacy_part_without_zone_map(
     spark, tmp_path
 ):
-    """Same legacy-manifest hazard through the EXPLICIT-grid partials
-    tier (_ts_scoped_partials): the zone-map-less part must be scanned
-    as boundary there too."""
-    from trck_spark.store import MANIFEST, open_trail_store
+    """Same zone-map-less segment through the EXPLICIT-grid partials
+    tier (_ts_scoped_partials): the query raises naming ``--compact``,
+    and the compacted copy matches the FSM path."""
+    import pytest
+
+    from trck_spark.engine import TrckSparkEngine
+    from trck_spark.store import compact_trail_store, open_trail_store
 
     path, _ = _ts_seg_store(spark, tmp_path, "tslegacy_g")
-    seg_manifest = os.path.join(path, "segment_0000", MANIFEST)
-    with open(seg_manifest) as f:
-        sm = json.load(f)
-    del sm["ts_min"], sm["ts_max"]
-    with open(seg_manifest, "w") as f:
-        json.dump(sm, f)
-    store = open_trail_store(spark, path)
-
-    prog = PROG_TS_GRID
-    from trck_spark.engine import TrckSparkEngine
-
+    _strip_zone_map(path)
     params = {"@arr": [["a"], ["b"], ["c"], ["d"]]}
-    rs = TrckSparkEngine(spark).run(
-        store, prog, params=params, uuid_col="uuid",
-        ts_col="timestamp", seq_col="seq",
-    )
-    out = rs.collect_json()
-    os.environ["TRCK_SPARK_NO_FASTPATH"] = "1"
-    try:
-        rs_fsm = TrckSparkEngine(spark).run(
-            store, prog, params=params, uuid_col="uuid",
-            ts_col="timestamp", seq_col="seq",
-        )
-        out_fsm = rs_fsm.collect_json()
-    finally:
-        del os.environ["TRCK_SPARK_NO_FASTPATH"]
-    assert out == out_fsm
+
+    def run(store, env=None):
+        for k, v in (env or {}).items():
+            os.environ[k] = v
+        try:
+            return TrckSparkEngine(spark).run(
+                store, PROG_TS_GRID, params=params, uuid_col="uuid",
+                ts_col="timestamp", seq_col="seq",
+            ).collect_json()
+        finally:
+            for k in env or {}:
+                del os.environ[k]
+
+    store = open_trail_store(spark, path)
+    for env in (None, FSM_ENV):
+        with pytest.raises(ValueError, match="--compact"):
+            run(store, env)
+    comp = compact_trail_store(spark, path, str(tmp_path / "tslegacy_gc"))
+    out = run(comp)
+    assert out == run(comp, FSM_ENV)
     assert {r["%v"]: r["$n"] for r in out} == {
         "a": 2, "b": 2, "c": 1, "d": 0
     }

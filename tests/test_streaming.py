@@ -678,10 +678,10 @@ start ->
 
 
 def test_state_blob_migration_and_versioning():
-    """Checkpoint state blobs from pre-versioning builds (bare 2- and
-    3-tuples) must load with defaulted fields instead of crashing the
-    executor with an unpack ValueError; unknown layouts must fail with
-    a clear message (ADVICE r06: streaming.py state pickle versioning)."""
+    """Only the v2 state blob loads: pre-versioning blobs (bare 2- and
+    3-tuples), a future version and a foreign blob all fail with an
+    error naming the fix (a fresh checkpoint) instead of crashing the
+    executor with an opaque unpack ValueError."""
     import pickle
 
     import pytest
@@ -689,15 +689,13 @@ def test_state_blob_migration_and_versioning():
     from trck_spark.streaming import _dump_state, _load_state
 
     ms = {0: (1, [], [])}
-    # oldest layout: (machine_states, last_ts)
-    assert _load_state(pickle.dumps((ms, 42))) == (ms, 42, None, None, set())
-    # round-6 layout: (machine_states, last_ts, eff)
-    assert _load_state(pickle.dumps((ms, 42, "effid"))) == (
-        ms, 42, "effid", None, set(),
-    )
+    # pre-versioning layouts: (machine_states, last_ts[, eff])
+    for old in ((ms, 42), (ms, 42, "effid")):
+        with pytest.raises(ValueError, match="fresh checkpoint"):
+            _load_state(pickle.dumps(old))
     # current layout round-trips (bytearray, as applyInPandasWithState
-    # hands the blob back); the r10 emit-once set is an OPTIONAL key —
-    # blobs written without it load as empty
+    # hands the blob back); the emit-once set is written only when
+    # non-empty — blobs without it load as empty
     blob = bytearray(_dump_state(ms, 42, "effid", (42, ("v",), ())))
     assert _load_state(blob) == (ms, 42, "effid", (42, ("v",), ()), set())
     blob2 = bytearray(
@@ -707,9 +705,9 @@ def test_state_blob_migration_and_versioning():
         ms, 42, "effid", None, {(1, "^u"), (3, "^u")},
     )
     # a FUTURE version and a foreign blob both fail loudly
-    with pytest.raises(ValueError, match="version"):
+    with pytest.raises(ValueError, match="version 99.*fresh checkpoint"):
         _load_state(pickle.dumps({"v": 99}))
-    with pytest.raises(ValueError, match="unrecognized"):
+    with pytest.raises(ValueError, match="fresh checkpoint"):
         _load_state(pickle.dumps(["not", "a", "state"]))
 
 
@@ -1087,9 +1085,12 @@ foreach %v
 
 def test_state_blob_legacy_he_key_migrates():
     """r10 checkpoints stored the emit-once set as a list of
-    (tuple_id, var) pairs under "he"; r11 packs it var-keyed ("he2").
-    Both load."""
+    (tuple_id, var) pairs under "he"; the current blob packs it
+    var-keyed ("he2").  An "he" blob no longer loads: it fails naming
+    a fresh checkpoint, and the "he2" form round-trips."""
     import pickle
+
+    import pytest
 
     from trck_spark.streaming import (
         _STATE_VERSION,
@@ -1101,7 +1102,8 @@ def test_state_blob_legacy_he_key_migrates():
         "v": _STATE_VERSION, "ms": {}, "ts": 5, "eff": None,
         "prev": None, "he": [(0, "^u"), (7, "^u")],
     })
-    assert _load_state(legacy)[4] == {(0, "^u"), (7, "^u")}
+    with pytest.raises(ValueError, match="fresh checkpoint"):
+        _load_state(legacy)
     blob = _dump_state({}, 5, None, None, {(3, "^x"), (1, "^x"), (2, "^y")})
     assert pickle.loads(blob).get("he2")  # compact form on the wire
     assert _load_state(blob)[4] == {(1, "^x"), (3, "^x"), (2, "^y")}
@@ -1285,9 +1287,10 @@ foreach %v
 
 def test_bucket_state_records_width_and_rejects_a_changed_one():
     """Bucket blobs carry the state_buckets width they were written
-    under; loading one under another width fails naming state_buckets
-    (trails would hash to other buckets and strand their state), and
-    blobs from before the width was recorded still load."""
+    under; loading one under another width, or one from before the
+    width was recorded, fails naming state_buckets and a fresh
+    checkpoint (trails would hash to other buckets and strand their
+    state)."""
     import pickle
 
     import pytest
@@ -1307,7 +1310,10 @@ def test_bucket_state_records_width_and_rejects_a_changed_one():
     with pytest.raises(ValueError, match="state_buckets"):
         _load_bucket_state(blob, 0)
     old = pickle.dumps({"bv": _BUCKET_STATE_VERSION, "t": trails})
-    assert _load_bucket_state(old, 8) == (trails, {}, {})
+    with pytest.raises(
+        ValueError, match="state_buckets=8.*fresh checkpoint"
+    ):
+        _load_bucket_state(old, 8)
     # a per-trail v2 blob is not a bucket blob
     from trck_spark.streaming import _dump_state
 

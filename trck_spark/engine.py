@@ -35,6 +35,7 @@ from trck_spark.output import format_output, results_to_dict
 from trck_spark.params import foreach_tuples
 from trck_spark.runner import TrckQuery
 from trck_spark.sideinputs import cnf_to_spark_condition
+from trck_spark.store import check_layout
 from trck_spark.worker import drop_spark_zip_importers
 
 PARTIAL_SCHEMA = (
@@ -722,16 +723,8 @@ class TrckSparkEngine:
             if pr is None or len(pr) != len(union) + 1:
                 return None
             pmin, pmax = pm.get("ts_min"), pm.get("ts_max")
-            if pmin is None or pmax is None:
-                # no zone map != empty: a manifest written before the
-                # zone maps existed carries rollups but no ts_min/ts_max
-                # (rollups and ts stats shipped in different revisions at
-                # version 3).  A part with any counted event but no zone
-                # map must be SCANNED, not skipped — skipping silently
-                # drops its events from the bounded answer
-                if any(int(x) for x in pr):
-                    boundary.append(i)
-                continue  # genuinely empty part (all-zero rollup)
+            if pmin is None:
+                continue  # empty part (check_layout guarantees zone maps)
             if lo <= pmin and pmax <= hi:
                 covered = [a + int(b) for a, b in zip(covered, pr)]
             elif pmax < lo or pmin > hi:
@@ -776,10 +769,9 @@ class TrckSparkEngine:
         )
 
     def _run_ts_scoped_hll(
-        self, events_df, program: Program, program_text_or_ir,
-        params: dict | None, manifest: dict, f0: str, hll_vars: list,
-        ts_conds: list, uuid_col: str, ts_col: str, seq_col: str | None,
-        fn_registry: dict | None,
+        self, events_df, program: Program, params: dict | None,
+        manifest: dict, f0: str, hll_vars: list, ts_conds: list,
+        ts_col: str, fn_registry: dict | None,
     ):
         """TIME-SCOPED uniques answer: a ``yield cookie to ^x`` query
         with timestamp relop conjuncts decomposes over the per-part
@@ -800,7 +792,7 @@ class TrckSparkEngine:
         from trck_spark.fsm.hll import EMPTY_HLL_HEX
 
         sk = self._ts_hll_code_sketches(
-            events_df, params, manifest, f0, ts_conds, uuid_col, ts_col
+            events_df, params, manifest, f0, ts_conds, ts_col
         )
         if sk is None:
             return None
@@ -854,9 +846,10 @@ class TrckSparkEngine:
         codes via the part lexicon.  part_ranges[i]: the ts intervals
         part i must still SCAN — the exact complement of its covered
         slice span within [lo, hi] (empty list = no scan needed).
-        Parts without a sidecar (legacy layout, over-budget field) get
-        the full [lo, hi].  Pure plan-prep over immutable files —
-        cached on the manifest keyed like the covered merge."""
+        Parts without a sidecar (switched off, over-budget field,
+        degenerate ts span) get the full [lo, hi].  Pure plan-prep over
+        immutable files — cached on the manifest keyed like the covered
+        merge."""
         import numpy as np
 
         from trck_spark.fsm.hll import HLL_M, _rle_decode_registers
@@ -948,15 +941,13 @@ class TrckSparkEngine:
 
     def _ts_hll_code_sketches(
         self, events_df, params: dict | None, manifest: dict, f0: str,
-        ts_conds: list, uuid_col: str, ts_col: str,
+        ts_conds: list, ts_col: str,
     ):
         """(covered_hex_by_union_code, boundary_hex_by_union_code,
         scope_diagnostics) for a ts-bounded sketch decomposition over
         the store's parts, or None when it can't be proven — the shared
         engine of the foreach (:meth:`_run_ts_scoped_hll`) and gridless
         value-set uniques tiers."""
-        from trck_spark.fsm.hll import EMPTY_HLL_HEX
-
         interval = _ts_bound_interval(ts_conds, params)
         if interval is None:
             return None
@@ -992,13 +983,8 @@ class TrckSparkEngine:
             if ph is None or plex is None or len(ph) != len(plex) + 1:
                 return None
             pmin, pmax = pm.get("ts_min"), pm.get("ts_max")
-            if pmin is None or pmax is None:
-                # no zone map != empty (see _run_ts_scoped_rollup): a
-                # part with any sketched cookie must be SCANNED, never
-                # skipped
-                if any(hx != EMPTY_HLL_HEX for hx in ph):
-                    boundary.append(i)
-                continue
+            if pmin is None:
+                continue  # empty part (check_layout guarantees zone maps)
             if lo <= pmin and pmax <= hi:
                 covered_entries.append((ph, plex, uindex))
             elif pmax < lo or pmin > hi:
@@ -1055,13 +1041,12 @@ class TrckSparkEngine:
             if boundary_files is None:
                 boundary_files = list(sub.inputFiles())
                 fcache[ck] = boundary_files
-            # The boundary sketch is the register-max over DISTINCT
-            # (value, cookie) pairs with an in-bound event — the same
-            # vectorized pass the store write runs (_field_hll_rollups),
-            # here with the ts predicate pushed into the parquet scan.
-            # NOT the FSM sub-run: per-event Python evaluation costs
-            # ~50x more than distinct + Arrow-batched murmur at scale,
-            # and idempotent adds make the two provably identical.
+            # The boundary sketch is the register-max over the
+            # (value, cookie) pairs with an in-bound event, read from
+            # the store's packed register column with the ts predicate
+            # pushed into the parquet scan.  NOT the FSM sub-run:
+            # per-event Python evaluation costs ~50x more, and
+            # idempotent adds make the two provably identical.
             if "__c_" + f0 in sub.columns:
                 # segment opens remap __c_* to union codes already
                 code_col = F.coalesce(F.col("__c_" + f0), F.lit(0))
@@ -1079,403 +1064,306 @@ class TrckSparkEngine:
                     mapping[F.col(f0).cast("string")], F.lit(0)
                 )
             n_slots = len(union) + 1
-            use_rr = all(
-                "__hll_rr" in part_frames[i].columns for i in boundary
+            # register-blob fold over the packed register column
+            # (store._hll_rr_expr): the JVM side is ONLY a pushed-down
+            # ts filter + 2-int projection (code, __hll_rr), and each
+            # scan partition folds its rows into one 16 KiB register
+            # blob per live code via a vectorized Arrow pass — so the
+            # data crossing any boundary is codes x partitions BLOBS
+            # (~3 k rows), not the values x 16384 x tasks
+            # partial-aggregate rows the groupBy(code, register) form
+            # shuffled (VERDICT r10 item 1b: at the adversarial 53 M-row
+            # boundary the partial agg barely reduced — the exchange
+            # carried ~input-size row counts, and the final agg
+            # collected values x 16384 rows to the driver).  There is
+            # no exchange at all: sketch adds are idempotent and
+            # register-max is commutative, so per-partition partials
+            # merge on the driver with one numpy max per blob.
+            from trck_spark.fsm.hll import (
+                HLL_M,
+                RR_RANK_BITS,
+                RR_RANK_MASK,
+                Hll,
             )
-            if use_rr:
-                # stores written with the materialized packed register
-                # column (store._hll_rr_expr) take the register-blob
-                # fold: the JVM side is ONLY a pushed-down ts filter +
-                # 2-int projection (code, __hll_rr), and each scan
-                # partition folds its rows into one 16 KiB register
-                # blob per live code via a vectorized Arrow pass — so
-                # the data crossing any boundary is codes x partitions
-                # BLOBS (~3 k rows), not the values x 16384 x tasks
-                # partial-aggregate rows the groupBy(code, register)
-                # form shuffled (VERDICT r10 item 1b: at the
-                # adversarial 53 M-row boundary the partial agg barely
-                # reduced — the exchange carried ~input-size row
-                # counts, and the final agg collected values x 16384
-                # rows to the driver).  There is no exchange at all:
-                # sketch adds are idempotent and register-max is
-                # commutative, so per-partition partials merge on the
-                # driver with one numpy max per blob.  Byte-identical
-                # to the murmur fold below (the packed column IS that
-                # fold, precomputed at write).
-                from trck_spark.fsm.hll import (
-                    HLL_M,
-                    RR_RANK_BITS,
-                    RR_RANK_MASK,
-                    Hll,
+
+            # sliced sidecar (store._write_hll_slices): for each
+            # boundary part that carries per-(code, time-slice)
+            # sketches, the slices fully inside [lo, hi] answer
+            # from the sidecar blobs and only the 1-2 PARTIAL
+            # slices at the bound's edges scan — the boundary cost
+            # becomes proportional to a slice (1/16 segment), not
+            # the segment, no matter where the bound lands.
+            # Idempotent register max makes slice/scan overlap
+            # harmless; only a coverage GAP could be wrong, and the
+            # ranges below are exact complements of the covered
+            # slice span.
+            scache = manifest.setdefault("_ts_hll_slice_cache", {})
+            slice_hit = scache.get(ck)
+            if slice_hit is None:
+                slice_hit = self._ts_hll_slice_plan(
+                    parts_meta, boundary, f0, union, lo, hi, n_slots
                 )
+                scache[ck] = slice_hit
+            slice_mat, part_ranges, slices_cov = slice_hit
 
-                # sliced sidecar (store._write_hll_slices): for each
-                # boundary part that carries per-(code, time-slice)
-                # sketches, the slices fully inside [lo, hi] answer
-                # from the sidecar blobs and only the 1-2 PARTIAL
-                # slices at the bound's edges scan — the boundary cost
-                # becomes proportional to a slice (1/16 segment), not
-                # the segment, no matter where the bound lands.
-                # Idempotent register max makes slice/scan overlap
-                # harmless; only a coverage GAP could be wrong, and the
-                # ranges below are exact complements of the covered
-                # slice span.
-                scache = manifest.setdefault("_ts_hll_slice_cache", {})
-                slice_hit = scache.get(ck)
-                if slice_hit is None:
-                    slice_hit = self._ts_hll_slice_plan(
-                        parts_meta, boundary, f0, union, lo, hi, n_slots
+            # prepared-plan cache (engine-cache analog): repeat
+            # runs re-execute every stage on the SAME immutable
+            # boundary plan but skip the py4j Dataset construction
+            pcache = manifest.setdefault("_ts_hll_plan_cache", {})
+            miss = pcache.get(ck, _MISS) is _MISS
+            fold_df = None if miss else pcache[ck]
+            frames = []
+            if miss:
+                for i in boundary:
+                    rngs = part_ranges.get(i, [(lo, hi)])
+                    if not rngs:
+                        continue  # part fully covered by slices
+                    tsl = F.col(ts_col).cast("long")
+                    cond = None
+                    for a, b in rngs:
+                        piece = (tsl >= a) & (tsl <= b)
+                        cond = piece if cond is None else cond | piece
+                    frames.append(part_frames[i].filter(cond))
+                if not frames:
+                    pcache[ck] = None
+            if miss and frames:
+                subf = frames[0]
+                for fr in frames[1:]:
+                    subf = subf.unionByName(
+                        fr, allowMissingColumns=True
                     )
-                    scache[ck] = slice_hit
-                slice_mat, part_ranges, slices_cov = slice_hit
-
-                # prepared-plan cache (engine-cache analog): repeat
-                # runs re-execute every stage on the SAME immutable
-                # boundary plan but skip the py4j Dataset construction
-                pcache = manifest.setdefault("_ts_hll_plan_cache", {})
-                miss = pcache.get(ck, _MISS) is _MISS
-                fold_df = None if miss else pcache[ck]
-                frames = []
-                if miss:
+                rr_pairs = subf.select(
+                    code_col.cast("int").alias("c"),
+                    F.col("__hll_rr").alias("rr"),
+                )
+                # Scale-adaptive Python-stream count: each
+                # mapInPandas PARTITION pays a fixed worker-stream
+                # setup (~0.2 s measured, per parent partition —
+                # a coalesce placed downstream of the fold cannot
+                # amortize it), and a union of bucketed segment
+                # scans opens >= minPartitionNum streams PER
+                # SEGMENT even when the boundary holds a few MB.
+                # Coalesce the fold input to ceil(scanned file
+                # bytes / 1 MB), clamped to [1, cores].  The tiny
+                # per-stream target is deliberate: the bucketed
+                # store's dictionary/RLE parquet decodes 10-20x
+                # its disk bytes (a ~90 MB segment holds 53 M
+                # rows), so any boundary bigger than ~cores MB
+                # keeps FULL parallelism — measured: 64 MB and
+                # even 4 MB targets under-parallelized the
+                # adversarial 53 M-row gate boundary (0.70 s at 32
+                # streams -> 1.1-1.4 s at 2-17).  Only a genuinely
+                # small boundary (the sf-scale store, a thin
+                # slice-complement) collapses to 1-3 streams,
+                # where the ~0.2 s per-stream worker setup — paid
+                # per PARENT partition, so a downstream coalesce
+                # cannot amortize it — dominated the row (1.02 s
+                # -> 0.43 s at sf0.1).  Partitioning cannot change
+                # the answer (register max is commutative and
+                # idempotent), pinned by the fold-path tests.
+                # Sizing input (ADVICE r11): bytes of the parts
+                # that actually CONTRIBUTE frames (parts fully
+                # covered by sidecar slices are excluded), each
+                # scaled by the fraction of its ts span left to
+                # scan — the full boundary union's listing
+                # overestimated a thin slice-complement over large
+                # segments and kept paying the ~0.2 s/stream setup
+                # the coalesce exists to avoid.  Over-/under-
+                # provisioning cannot change the answer (register
+                # max is commutative and idempotent).
+                n_streams = None
+                try:
+                    tot_b = 0
                     for i in boundary:
                         rngs = part_ranges.get(i, [(lo, hi)])
                         if not rngs:
-                            continue  # part fully covered by slices
-                        tsl = F.col(ts_col).cast("long")
-                        cond = None
-                        for a, b in rngs:
-                            piece = (tsl >= a) & (tsl <= b)
-                            cond = piece if cond is None else cond | piece
-                        frames.append(part_frames[i].filter(cond))
-                    if not frames:
-                        pcache[ck] = None
-                if miss and frames:
-                    subf = frames[0]
-                    for fr in frames[1:]:
-                        subf = subf.unionByName(
-                            fr, allowMissingColumns=True
-                        )
-                    rr_pairs = subf.select(
-                        code_col.cast("int").alias("c"),
-                        F.col("__hll_rr").alias("rr"),
+                            continue  # fully covered by slices
+                        pfl = fcache.get(("part", i))
+                        if pfl is None:
+                            pfl = list(
+                                part_frames[i].inputFiles()
+                            )
+                            fcache[("part", i)] = pfl
+                        pb = 0
+                        for fp in pfl:
+                            p = (
+                                fp[len("file:"):]
+                                if fp.startswith("file:")
+                                else fp
+                            )
+                            pb += _os.path.getsize(p)
+                        pmin = parts_meta[i].get("ts_min")
+                        pmax = parts_meta[i].get("ts_max")
+                        if (
+                            pmin is not None
+                            and pmax is not None
+                            and pmax >= pmin
+                        ):
+                            span = pmax - pmin + 1
+                            scan = sum(
+                                max(
+                                    0,
+                                    min(b, pmax) - max(a, pmin) + 1,
+                                )
+                                for a, b in rngs
+                            )
+                            pb = int(pb * min(1.0, scan / span))
+                        tot_b += pb
+                    par = (
+                        self.spark.sparkContext.defaultParallelism
                     )
-                    # Scale-adaptive Python-stream count: each
-                    # mapInPandas PARTITION pays a fixed worker-stream
-                    # setup (~0.2 s measured, per parent partition —
-                    # a coalesce placed downstream of the fold cannot
-                    # amortize it), and a union of bucketed segment
-                    # scans opens >= minPartitionNum streams PER
-                    # SEGMENT even when the boundary holds a few MB.
-                    # Coalesce the fold input to ceil(scanned file
-                    # bytes / 1 MB), clamped to [1, cores].  The tiny
-                    # per-stream target is deliberate: the bucketed
-                    # store's dictionary/RLE parquet decodes 10-20x
-                    # its disk bytes (a ~90 MB segment holds 53 M
-                    # rows), so any boundary bigger than ~cores MB
-                    # keeps FULL parallelism — measured: 64 MB and
-                    # even 4 MB targets under-parallelized the
-                    # adversarial 53 M-row gate boundary (0.70 s at 32
-                    # streams -> 1.1-1.4 s at 2-17).  Only a genuinely
-                    # small boundary (the sf-scale store, a thin
-                    # slice-complement) collapses to 1-3 streams,
-                    # where the ~0.2 s per-stream worker setup — paid
-                    # per PARENT partition, so a downstream coalesce
-                    # cannot amortize it — dominated the row (1.02 s
-                    # -> 0.43 s at sf0.1).  Partitioning cannot change
-                    # the answer (register max is commutative and
-                    # idempotent), pinned by the fold-path tests.
-                    # Sizing input (ADVICE r11): bytes of the parts
-                    # that actually CONTRIBUTE frames (parts fully
-                    # covered by sidecar slices are excluded), each
-                    # scaled by the fraction of its ts span left to
-                    # scan — the full boundary union's listing
-                    # overestimated a thin slice-complement over large
-                    # segments and kept paying the ~0.2 s/stream setup
-                    # the coalesce exists to avoid.  Over-/under-
-                    # provisioning cannot change the answer (register
-                    # max is commutative and idempotent).
-                    n_streams = None
-                    try:
-                        tot_b = 0
-                        for i in boundary:
-                            rngs = part_ranges.get(i, [(lo, hi)])
-                            if not rngs:
-                                continue  # fully covered by slices
-                            pfl = fcache.get(("part", i))
-                            if pfl is None:
-                                pfl = list(
-                                    part_frames[i].inputFiles()
-                                )
-                                fcache[("part", i)] = pfl
-                            pb = 0
-                            for fp in pfl:
-                                p = (
-                                    fp[len("file:"):]
-                                    if fp.startswith("file:")
-                                    else fp
-                                )
-                                pb += _os.path.getsize(p)
-                            pmin = parts_meta[i].get("ts_min")
-                            pmax = parts_meta[i].get("ts_max")
-                            if (
-                                pmin is not None
-                                and pmax is not None
-                                and pmax >= pmin
-                            ):
-                                span = pmax - pmin + 1
-                                scan = sum(
-                                    max(
-                                        0,
-                                        min(b, pmax) - max(a, pmin) + 1,
-                                    )
-                                    for a, b in rngs
-                                )
-                                pb = int(pb * min(1.0, scan / span))
-                            tot_b += pb
-                        par = (
-                            self.spark.sparkContext.defaultParallelism
-                        )
-                        n_str = max(
-                            1, min(par, -(-tot_b // (1 << 20)))
-                        )
-                        rr_pairs = rr_pairs.coalesce(int(n_str))
-                        n_streams = int(n_str)
-                    except Exception:
-                        pass  # sizing is best-effort; plan unchanged
-                    ns = n_slots
+                    n_str = max(
+                        1, min(par, -(-tot_b // (1 << 20)))
+                    )
+                    rr_pairs = rr_pairs.coalesce(int(n_str))
+                    n_streams = int(n_str)
+                except Exception:
+                    pass  # sizing is best-effort; plan unchanged
+                ns = n_slots
 
-                    def _fold_rr(batches):
-                        # per-partition scatter-max of the packed
-                        # (reg << 6 | rank) ints into a flat
-                        # (codes x 16384) uint8 accumulator; within a
-                        # (code, reg) cell max(packed) == the packed
-                        # value carrying max(rank), so one pass over
-                        # the raw ints needs no pre-aggregation
-                        drop_spark_zip_importers()
-                        import numpy as np
-                        import pandas as pd
+                def _fold_rr(batches):
+                    # per-partition scatter-max of the packed
+                    # (reg << 6 | rank) ints into a flat
+                    # (codes x 16384) uint8 accumulator; within a
+                    # (code, reg) cell max(packed) == the packed
+                    # value carrying max(rank), so one pass over
+                    # the raw ints needs no pre-aggregation
+                    drop_spark_zip_importers()
+                    import numpy as np
+                    import pandas as pd
 
-                        flat = None
-                        for pdf in batches:
-                            if not len(pdf):
-                                continue
-                            if flat is None:
-                                flat = np.zeros(ns * HLL_M, np.uint8)
-                            rr = pdf["rr"].to_numpy(np.int64)
-                            keys = (
-                                pdf["c"].to_numpy(np.int64) * HLL_M
-                                + (rr >> RR_RANK_BITS)
-                            )
-                            np.maximum.at(
-                                flat,
-                                keys,
-                                (rr & RR_RANK_MASK).astype(np.uint8),
-                            )
+                    flat = None
+                    for pdf in batches:
+                        if not len(pdf):
+                            continue
                         if flat is None:
-                            return
-                        regs2d = flat.reshape(ns, HLL_M)
-                        live = np.flatnonzero(regs2d.any(axis=1))
-                        if not len(live):
-                            return
-                        yield pd.DataFrame(
-                            {
-                                "c": live.astype("int32"),
-                                "regs": [
-                                    regs2d[c].tobytes() for c in live
-                                ],
-                            }
+                            flat = np.zeros(ns * HLL_M, np.uint8)
+                        rr = pdf["rr"].to_numpy(np.int64)
+                        keys = (
+                            pdf["c"].to_numpy(np.int64) * HLL_M
+                            + (rr >> RR_RANK_BITS)
                         )
-
-                    fold_df = rr_pairs.mapInPandas(
-                        _fold_rr, "c int, regs binary"
-                    )
-                    # Driver-merge bound (VERDICT r11 item 1/item 2 of
-                    # "what's wrong"): the collect below pulls one
-                    # 16 KiB blob per live code per STREAM — fine at
-                    # local[32] (<= codes x 32 blobs), but the stream
-                    # cap is defaultParallelism, so a deep boundary on
-                    # a real cluster could collect codes x thousands x
-                    # 16 KiB (GBs) to the driver.  When the estimated
-                    # collect exceeds the cap, insert ONE blob-level
-                    # groupBy("c") register-max merge first: the
-                    # exchange carries streams x codes x 16 KiB across
-                    # the cluster, and the driver collects O(codes)
-                    # blobs regardless of parallelism.  Register max
-                    # is associative/commutative, so the two-level
-                    # fold is byte-identical (pinned by the forced-cap
-                    # test).  At the bench geometry (32 streams x ~101
-                    # codes x 16 KiB ~= 52 MB < 256 MB) the plan is
-                    # UNCHANGED — no local-only tuning.
-                    try:
-                        est = (
-                            n_streams
-                            if n_streams is not None
-                            else self.spark.sparkContext
-                            .defaultParallelism
+                        np.maximum.at(
+                            flat,
+                            keys,
+                            (rr & RR_RANK_MASK).astype(np.uint8),
                         )
-                        cap_b = float(
-                            _os.environ.get(
-                                "TRCK_SPARK_RR_FOLD_DRIVER_MAX_MB",
-                                "256",
-                            )
-                        ) * (1 << 20)
-                        if est * n_slots * HLL_M > cap_b:
-
-                            def _merge_rr_blobs(pdf):
-                                drop_spark_zip_importers()
-                                import numpy as np
-                                import pandas as pd
-
-                                out = None
-                                for b in pdf["regs"]:
-                                    a = np.frombuffer(
-                                        bytes(b), np.uint8
-                                    )
-                                    if out is None:
-                                        out = a.copy()
-                                    else:
-                                        np.maximum(out, a, out)
-                                return pd.DataFrame(
-                                    {
-                                        "c": pdf["c"].iloc[:1],
-                                        "regs": [out.tobytes()],
-                                    }
-                                )
-
-                            fold_df = fold_df.groupBy("c").applyInPandas(
-                                _merge_rr_blobs, "c int, regs binary"
-                            )
-                    except Exception:
-                        pass  # bound is best-effort; plan unchanged
-                    pcache[ck] = fold_df
-                import numpy as np
-
-                b_raw: dict[int, object] = {}
-                if fold_df is not None:
-                    for r in fold_df.collect():
-                        arr = np.frombuffer(
-                            bytes(r["regs"]), dtype=np.uint8
-                        )
-                        c = int(r["c"])
-                        prev = b_raw.get(c)
-                        b_raw[c] = (
-                            arr.copy()
-                            if prev is None
-                            else np.maximum(prev, arr)
-                        )
-                if slice_mat is not None:
-                    for c in np.flatnonzero(slice_mat.any(axis=1)):
-                        c = int(c)
-                        prev = b_raw.get(c)
-                        b_raw[c] = (
-                            slice_mat[c].copy()
-                            if prev is None
-                            else np.maximum(prev, slice_mat[c])
-                        )
-                for c, arr in b_raw.items():
-                    s = Hll()
-                    s.M = bytearray(arr.tobytes())
-                    b_code_regs[c] = s.to_hex()
-                return (
-                    covered_hex,
-                    b_code_regs,
-                    {
-                        "covered_parts": len(covered_entries),
-                        "boundary_parts": list(boundary),
-                        "boundary_files": boundary_files,
-                        "boundary_plan": "rr_fold",
-                        "slices_covered": slices_cov or None,
-                    },
-                )
-            pairs = sub.filter(
-                (F.col(ts_col).cast("long") >= lo)
-                & (F.col(ts_col).cast("long") <= hi)
-            ).select(
-                F.col(uuid_col).cast("string").alias("u"),
-                code_col.cast("int").alias("c"),
-            )
-            # JVM-side pre-reduction: (cookie, set of matched codes) —
-            # the bucketed store scan is already hash-partitioned by
-            # uuid, so this HashAggregate runs with NO exchange, and
-            # only ~trails rows (not ~events) cross into Python.  The
-            # raw event stream through Arrow alone measured 7-10s at a
-            # 25M-row boundary; this form moves ~0.8M rows
-            grouped = pairs.groupBy("u").agg(
-                F.collect_set("c").alias("cs")
-            )
-
-            def _fold(batches):
-                # per-partition flat scatter-max into a (codes x 2^14)
-                # accumulator: one murmur per distinct cookie, registers
-                # repeated per matched code, vectorized end to end.
-                # Sketch adds are idempotent, so cookies split across
-                # file-split partitions just max to the same registers
-                drop_spark_zip_importers()
-                import numpy as np
-                import pandas as pd
-
-                from trck_spark.fsm.hll import (
-                    HLL_M,
-                    cookie_display_hex,
-                    hll_register_updates_vec,
-                )
-
-                flat = None
-                for pdf in batches:
-                    if not len(pdf):
-                        continue
                     if flat is None:
-                        flat = np.zeros(n_slots * HLL_M, np.uint8)
-                    disp = [cookie_display_hex(u) for u in pdf["u"]]
-                    reg_u, rank_u = hll_register_updates_vec(disp)
-                    lens = np.fromiter(
-                        (len(x) for x in pdf["cs"]),
-                        np.int64,
-                        count=len(pdf),
+                        return
+                    regs2d = flat.reshape(ns, HLL_M)
+                    live = np.flatnonzero(regs2d.any(axis=1))
+                    if not len(live):
+                        return
+                    yield pd.DataFrame(
+                        {
+                            "c": live.astype("int32"),
+                            "regs": [
+                                regs2d[c].tobytes() for c in live
+                            ],
+                        }
                     )
-                    allc = np.concatenate(
-                        [np.asarray(x, np.int64) for x in pdf["cs"]]
-                    )
-                    regr = np.repeat(np.asarray(reg_u, np.int64), lens)
-                    rankr = np.repeat(
-                        np.asarray(rank_u, np.uint8), lens
-                    )
-                    np.maximum.at(flat, allc * HLL_M + regr, rankr)
-                if flat is None:
-                    return
-                regs2d = flat.reshape(n_slots, HLL_M)
-                live = [c for c in range(n_slots) if regs2d[c].any()]
-                if not live:
-                    return
-                yield pd.DataFrame(
-                    {
-                        "c": live,
-                        # RAW register bytes, not RLE hex: the driver
-                        # merges partition partials with one numpy max
-                        # per row — RLE-decoding thousands of partials
-                        # in Python costs more than the whole scan
-                        "regs": [regs2d[c].tobytes() for c in live],
-                    }
-                )
 
+                fold_df = rr_pairs.mapInPandas(
+                    _fold_rr, "c int, regs binary"
+                )
+                # Driver-merge bound (VERDICT r11 item 1/item 2 of
+                # "what's wrong"): the collect below pulls one
+                # 16 KiB blob per live code per STREAM — fine at
+                # local[32] (<= codes x 32 blobs), but the stream
+                # cap is defaultParallelism, so a deep boundary on
+                # a real cluster could collect codes x thousands x
+                # 16 KiB (GBs) to the driver.  When the estimated
+                # collect exceeds the cap, insert ONE blob-level
+                # groupBy("c") register-max merge first: the
+                # exchange carries streams x codes x 16 KiB across
+                # the cluster, and the driver collects O(codes)
+                # blobs regardless of parallelism.  Register max
+                # is associative/commutative, so the two-level
+                # fold is byte-identical (pinned by the forced-cap
+                # test).  At the bench geometry (32 streams x ~101
+                # codes x 16 KiB ~= 52 MB < 256 MB) the plan is
+                # UNCHANGED — no local-only tuning.
+                try:
+                    est = (
+                        n_streams
+                        if n_streams is not None
+                        else self.spark.sparkContext
+                        .defaultParallelism
+                    )
+                    cap_b = float(
+                        _os.environ.get(
+                            "TRCK_SPARK_RR_FOLD_DRIVER_MAX_MB",
+                            "256",
+                        )
+                    ) * (1 << 20)
+                    if est * n_slots * HLL_M > cap_b:
+
+                        def _merge_rr_blobs(pdf):
+                            drop_spark_zip_importers()
+                            import numpy as np
+                            import pandas as pd
+
+                            out = None
+                            for b in pdf["regs"]:
+                                a = np.frombuffer(
+                                    bytes(b), np.uint8
+                                )
+                                if out is None:
+                                    out = a.copy()
+                                else:
+                                    np.maximum(out, a, out)
+                            return pd.DataFrame(
+                                {
+                                    "c": pdf["c"].iloc[:1],
+                                    "regs": [out.tobytes()],
+                                }
+                            )
+
+                        fold_df = fold_df.groupBy("c").applyInPandas(
+                            _merge_rr_blobs, "c int, regs binary"
+                        )
+                except Exception:
+                    pass  # bound is best-effort; plan unchanged
+                pcache[ck] = fold_df
             import numpy as np
 
             b_raw: dict[int, object] = {}
-            for r in grouped.mapInPandas(
-                _fold, "c int, regs binary"
-            ).collect():
-                arr = np.frombuffer(bytes(r["regs"]), dtype=np.uint8)
-                c = int(r["c"])
-                prev = b_raw.get(c)
-                b_raw[c] = (
-                    arr.copy() if prev is None else np.maximum(prev, arr)
-                )
-            from trck_spark.fsm.hll import Hll
-
+            if fold_df is not None:
+                for r in fold_df.collect():
+                    arr = np.frombuffer(
+                        bytes(r["regs"]), dtype=np.uint8
+                    )
+                    c = int(r["c"])
+                    prev = b_raw.get(c)
+                    b_raw[c] = (
+                        arr.copy()
+                        if prev is None
+                        else np.maximum(prev, arr)
+                    )
+            if slice_mat is not None:
+                for c in np.flatnonzero(slice_mat.any(axis=1)):
+                    c = int(c)
+                    prev = b_raw.get(c)
+                    b_raw[c] = (
+                        slice_mat[c].copy()
+                        if prev is None
+                        else np.maximum(prev, slice_mat[c])
+                    )
             for c, arr in b_raw.items():
                 s = Hll()
                 s.M = bytearray(arr.tobytes())
                 b_code_regs[c] = s.to_hex()
+            return (
+                covered_hex,
+                b_code_regs,
+                {
+                    "covered_parts": len(covered_entries),
+                    "boundary_parts": list(boundary),
+                    "boundary_files": boundary_files,
+                    "boundary_plan": "rr_fold",
+                    "slices_covered": slices_cov or None,
+                },
+            )
         return (
             covered_hex,
             b_code_regs,
@@ -1489,8 +1377,7 @@ class TrckSparkEngine:
     def _run_hll_valueset(
         self, events_df, program: Program, params: dict | None,
         manifest: dict, f0: str, hll_vars: list, values: frozenset,
-        ts_conds: list, uuid_col: str, ts_col: str,
-        fn_registry: dict | None,
+        ts_conds: list, ts_col: str, fn_registry: dict | None,
     ):
         """GRIDLESS value-set uniques ('how many unique cookies
         clicked?'): clause 0 matches a driver-resolvable value set on
@@ -1520,8 +1407,7 @@ class TrckSparkEngine:
             member_hexes = [hll_roll[c] for c in codes]
         else:
             sk = self._ts_hll_code_sketches(
-                events_df, params, manifest, f0, ts_conds, uuid_col,
-                ts_col,
+                events_df, params, manifest, f0, ts_conds, ts_col,
             )
             if sk is None:
                 return None
@@ -1592,12 +1478,8 @@ class TrckSparkEngine:
             if pr is None or len(pr) != len(union) + 1:
                 return None
             pmin, pmax = pm.get("ts_min"), pm.get("ts_max")
-            if pmin is None or pmax is None:
-                # legacy manifest: rollups without a zone map — scan the
-                # part (boundary), never skip it (see _run_ts_scoped_rollup)
-                if any(int(x) for x in pr):
-                    boundary.append(i)
-                continue  # genuinely empty part (all-zero rollup)
+            if pmin is None:
+                continue  # empty part (check_layout guarantees zone maps)
             if lo <= pmin and pmax <= hi:
                 covered = [a + int(b) for a, b in zip(covered, pr)]
                 pruned_any = True
@@ -1786,6 +1668,7 @@ class TrckSparkEngine:
                     return refreshed
 
         manifest = getattr(events_df, "_trailstore_manifest", None) or {}
+        check_layout(manifest)
         # a SEGMENTED store's manifest carries clustered=False: the
         # union of per-part bucketed scans concatenates partitions, so
         # a uuid's rows are NOT co-located and the repartition must stay
@@ -1890,8 +1773,8 @@ class TrckSparkEngine:
             ):
                 # --- rollup answer (VERDICT r06 item 4): the store
                 # already aggregated (code, count) at WRITE time
-                # (store.py _field_rollups), so when the scan would be
-                # an identity — ts_unique proves the dedup window a
+                # (store._write_stats_and_rollups), so when the scan
+                # would be an identity — ts_unique proves the dedup window a
                 # no-op, and rollup_weights proves the program counts
                 # every matching event exactly once — the counters
                 # frame is built straight from the manifest: ZERO scan.
@@ -2013,9 +1896,8 @@ class TrckSparkEngine:
                     )
                 ):
                     rs = self._run_ts_scoped_hll(
-                        events_df, program, program_text_or_ir, params,
-                        manifest, f0, r_h[0], r_h[1], uuid_col, ts_col,
-                        seq_col, fn_registry,
+                        events_df, program, params, manifest, f0,
+                        r_h[0], r_h[1], ts_col, fn_registry,
                     )
                     if rs is not None:
                         return rs
@@ -2070,9 +1952,8 @@ class TrckSparkEngine:
                     )
                 ):
                     rs = self._run_ts_scoped_hll(
-                        events_df, program, program_text_or_ir, params,
-                        manifest, f0, r_h[0], r_h[1], uuid_col, ts_col,
-                        seq_col, fn_registry,
+                        events_df, program, params, manifest, f0,
+                        r_h[0], r_h[1], ts_col, fn_registry,
                     )
                     if rs is not None:
                         return rs
@@ -2105,8 +1986,7 @@ class TrckSparkEngine:
                 ):
                     rs = self._run_hll_valueset(
                         events_df, program, params, manifest, vfield,
-                        v_hll_vars, v_values, v_ts, uuid_col, ts_col,
-                        fn_registry,
+                        v_hll_vars, v_values, v_ts, ts_col, fn_registry,
                     )
                     if rs is not None:
                         return rs

@@ -122,8 +122,8 @@ def cookie_display_hex(uuid: str) -> str:
 def _murmur_h1_32_vec(blocks):
     """Vectorized murmur3_x64_128_h1 for inputs of EXACTLY 32 bytes
     (two 16-byte blocks, empty tail) — the cookie display form is always
-    32 hex characters, which makes the store's write-time sketch pass a
-    few numpy expressions instead of a per-row Python hash.
+    32 hex characters, which makes the store's write-time register
+    column a few numpy expressions instead of a per-row Python hash.
 
     blocks: uint64 ndarray of shape (n, 4), little-endian words.
     Returns uint64 ndarray of shape (n,): the reference's h1."""
@@ -166,39 +166,6 @@ def _murmur_h1_32_vec(blocks):
     return h1
 
 
-def hll_register_updates_vec(displays):
-    """(register_index, rank) arrays for a sequence of display-form
-    strings — the vectorized form of :func:`hll_register_update` used by
-    the store's write-time sketch rollup.  Inputs must be 32-character
-    ASCII strings (every cookie display form is); anything else falls
-    back to the scalar path for that row."""
-    import numpy as np
-
-    n = len(displays)
-    enc = np.empty(n, dtype="S32")
-    odd: list[int] = []
-    for i, s in enumerate(displays):
-        b = s.encode()
-        if len(b) != 32:
-            odd.append(i)
-        enc[i] = b
-    blocks = enc.view(np.uint64).reshape(n, 4)
-    h = _murmur_h1_32_vec(blocks)
-    idx = (h & np.uint64(HLL_M - 1)).astype(np.int64)
-    low32 = ((h | np.uint64(HLL_M - 1)) & np.uint64(0xFFFFFFFF)).astype(
-        np.uint32
-    )
-    # rank = clz32(low32) + 1 = 33 - bit_length; low32 >= 0x3fff, so
-    # bit_length in [14, 32] — exact integer comparisons, no float log
-    bl = np.full(n, 14, dtype=np.int64)
-    for k in range(14, 32):
-        bl += (low32 >= np.uint32(1 << k)).astype(np.int64)
-    rank = 33 - bl
-    for i in odd:  # non-32-byte input (not a cookie display): exact path
-        idx[i], rank[i] = hll_register_update(displays[i].encode())
-    return idx, rank
-
-
 def hll_register_update(data: bytes) -> tuple[int, int]:
     """(register_index, rank) for one added value — the relational form of
     hll_add, aggregable with groupBy(register).max(rank)."""
@@ -224,8 +191,8 @@ def hll_rr_from_uuids(uuids) -> "object":
     The store persists this as a per-row ``__hll_rr`` column so any
     cookie-uniques scan (the ts-bounded boundary slice above all) stays
     entirely JVM-side: ``groupBy(code, rr >> 6).agg(max(rr & 63))`` is
-    byte-identical to the Python murmur fold, with zero Arrow transfer
-    of cookie strings.
+    byte-identical to hashing each cookie, with zero Arrow transfer of
+    cookie strings.
 
     Vectorized end to end for the two display forms
     (:func:`cookie_display_hex`): strict 32-hex uuids lowercase

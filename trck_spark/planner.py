@@ -395,7 +395,7 @@ def _clause_shape(c):
 def rollup_weights(program: Program, var: str, field: str) -> dict | None:
     """{counter var -> per-event multiplicity} when an implicit-foreach
     counter can be answered from the TrailStore's write-time rollup
-    (store.py _field_rollups), else None.
+    (store.py _write_stats_and_rollups), else None.
 
     The rollup is raw event counts per field value, so the program must
     count every matching event exactly once per yield: clause 0 must be

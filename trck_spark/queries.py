@@ -274,31 +274,9 @@ def _segmented_events_store(spark, sf_dir):
     if hit is not None:
         return hit
     if is_trail_store(path):
-        from trck_spark.store import ensure_rollups, read_manifest
-
-        _m = read_manifest(path)
-        if not _m.get("hll_rr_col") and not os.environ.get(
-            "TRCK_SPARK_NO_HLL_RR"
-        ):
-            # pre-r10 layout (no materialized __hll_rr column): the
-            # rr_fold boundary plan needs the PERSISTED column, which
-            # only a rewrite can add — rebuild so repeat runs measure
-            # the shipped layout.  Skipped under TRCK_SPARK_NO_HLL_RR:
-            # a rebuild can never satisfy the check then, so
-            # rebuilding would loop every fresh session (ADVICE r10)
-            import shutil
-
-            shutil.rmtree(path, ignore_errors=True)
-        else:
-            # upgrade a cache dir written by an older layout in place
-            # (adds missing rollups / zone maps / hll sketches / the
-            # r11 sliced sketch sidecar; no data rewrite — an r10
-            # cache previously forced a full rebuild here)
-            if "hll_rollups" not in _m or "hll_slices" not in _m:
-                ensure_rollups(spark, path)
-            store = open_trail_store(spark, path)
-            _SEG_STORES[memo_key] = store
-            return store
+        store = open_trail_store(spark, path)
+        _SEG_STORES[memo_key] = store
+        return store
     events = load_events(spark, sf_dir).select(
         "uuid", "timestamp", "event_id", "event_type"
     )

@@ -31,6 +31,9 @@ import re
 from trck_spark.worker import drop_spark_zip_importers
 
 MANIFEST = "_trailstore.json"
+# per-row packed (register << 6 | rank) of the row's cookie
+# (fsm/hll.hll_rr_from_uuids), written into every store
+HLL_RR_COL = "__hll_rr"
 
 
 def _dump_manifest(m: dict, f) -> None:
@@ -199,20 +202,15 @@ def write_trail_store(df, path: str, uuid_col: str = "uuid",
     dicts = _dict_lexicons(df, candidates, dict_max)
     if dicts:
         df = _with_dict_codes(df, dicts)
-    hll_rr_col = None
-    if not os.environ.get("TRCK_SPARK_NO_HLL_RR"):
-        # materialize the packed (register << 6 | rank) of each row's
-        # cookie at WRITE time (fsm/hll.hll_rr_from_uuids): murmur of a
-        # cookie is not expressible in Spark SQL, so persisting its
-        # 4-byte relational form is what keeps every later uniques scan
-        # (ts-bounded boundary slices above all) pure JVM —
-        # groupBy(code, rr >> 6).max(rr & 63) with zero Arrow transfer.
-        # Recomputed unconditionally (a compaction input may carry a
-        # stale or partially-null column from a mixed-layout union).
-        hll_rr_col = "__hll_rr"
-        df = df.drop(hll_rr_col).withColumn(
-            hll_rr_col, _hll_rr_expr(uuid_col)
-        )
+    # materialize the packed (register << 6 | rank) of each row's
+    # cookie at WRITE time (fsm/hll.hll_rr_from_uuids): murmur of a
+    # cookie is not expressible in Spark SQL, so persisting its 4-byte
+    # relational form is what keeps every later uniques scan
+    # (ts-bounded boundary slices above all) pure JVM —
+    # groupBy(code, rr >> 6).max(rr & 63) with zero Arrow transfer.
+    # Recomputed unconditionally (a compaction input may carry a stale
+    # or partially-null column from an older-layout union).
+    df = df.drop(HLL_RR_COL).withColumn(HLL_RR_COL, _hll_rr_expr(uuid_col))
     table = _table_name(path)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     (
@@ -227,19 +225,17 @@ def write_trail_store(df, path: str, uuid_col: str = "uuid",
     rollups, ts_unique, ts_min, ts_max, db_max = _write_stats_and_rollups(
         spark.table(table), dicts, uuid_col, ts_col, db_col
     )
+    hll_fields = _hll_fields(dicts)
     hll_slices: dict = {}
     hll_rollups: dict = {}
-    if hll_rr_col and ts_min is not None:
+    if hll_fields and ts_min is not None:
         hll_slices, hll_rollups = _write_hll_slices(
-            spark.table(table), dicts, ts_col, ts_min, ts_max, path
+            spark.table(table), dicts, hll_fields, ts_col, ts_min, ts_max,
+            path,
         )
-    leftover = [f for f in dicts if f not in hll_rollups]
-    if leftover:
-        hll_rollups.update(
-            _field_hll_rollups(
-                spark.table(table), dicts, uuid_col,
-                only_fields=None if not hll_rollups else leftover,
-            )
+    if hll_fields and not hll_rollups:
+        hll_rollups = _field_hll_rollups(
+            spark.table(table), dicts, hll_fields
         )
     manifest = {
         "version": 3,
@@ -256,7 +252,7 @@ def write_trail_store(df, path: str, uuid_col: str = "uuid",
         "rollups": rollups,
         "hll_rollups": hll_rollups,
         "hll_slices": hll_slices,
-        "hll_rr_col": hll_rr_col,
+        "hll_rr_col": HLL_RR_COL,
         "schema_ddl": _schema_ddl(df),
     }
     with open(os.path.join(path, MANIFEST), "w") as f:
@@ -366,64 +362,6 @@ def _write_stats_and_rollups(
     return rollups, ts_unique, ts_min, ts_max, db_max
 
 
-def _field_rollups(table_df, dicts: dict) -> dict:
-    """Per-field event counts by dictionary code, computed in ONE pass —
-    the write-time materialized aggregate a native column store keeps.
-
-    A counter over 100 TB should not rescan events: the simple-program
-    recognizer (engine.run) answers implicit-foreach count queries
-    straight from this rollup when the store proves the scan would be an
-    identity (ts_unique => the consecutive-duplicate skip is a no-op,
-    and the rollup-safe program shape counts every matching event
-    exactly once).  Monoid (plain sums), so a future append path merges
-    rollups without rescanning history.
-
-    Shape: {field: [count_code0, count_code1, ...]} indexed by the
-    dictionary code (0 = ""/absent, 1..n = lexicon order) — bounded by
-    the dict_max lexicon cap, so the manifest stays small.  The explode
-    widens rows x n_fields before the partial aggregation, but the
-    group cardinality is tiny (fields x codes), so map-side combine
-    collapses it to one short shuffle per write."""
-    import sys
-    import time
-
-    from pyspark.sql import functions as F
-
-    if not dicts:
-        return {}
-    t0 = time.time()
-    pairs = (
-        table_df.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(f).alias("f"),
-                            F.coalesce(
-                                F.col("__c_" + f), F.lit(0)
-                            ).alias("c"),
-                        )
-                        for f in dicts
-                    ]
-                )
-            ).alias("p")
-        )
-        .groupBy("p.f", "p.c")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    rollups = {f: [0] * (len(values) + 1) for f, values in dicts.items()}
-    for r in pairs:
-        rollups[r["f"]][r["c"]] = r["n"]
-    # write-time cost transparency: the one-scan price the store pays so
-    # counters never rescan (bench logs show it amortized per write)
-    print(
-        f"# store rollups: {len(dicts)} fields in {time.time() - t0:.1f}s",
-        file=sys.stderr,
-    )
-    return rollups
-
-
 # total sketch slots (sum over fields of lexicon size + 1) the write-time
 # HLL rollup will compute: each slot is a p=14 sketch (up to 16384
 # registers RLE'd into the manifest), so the cap bounds both manifest
@@ -449,23 +387,45 @@ HLL_SLICE_BYTES_MAX = 256 * 1024 * 1024
 HLL_SLICE_FILE = "_hll_slices.parquet"
 
 
-def _field_hll_rollups(
-    table_df, dicts: dict, uuid_col: str, only_fields=None
-) -> dict:
+def _hll_fields(dicts: dict) -> list[str]:
+    """Dictionary fields that get write-time cookie sketches: admitted
+    in sorted-name order while their slots (lexicon size + 1) fit the
+    ``HLL_ROLLUP_VALUES_MAX`` budget.  The sliced sidecar and the
+    part-level sketch rollups both sketch exactly these fields."""
+    if os.environ.get("TRCK_SPARK_NO_HLL_ROLLUP"):
+        return []
+    budget = int(
+        os.environ.get(
+            "TRCK_SPARK_HLL_ROLLUP_VALUES_MAX", str(HLL_ROLLUP_VALUES_MAX)
+        )
+    )
+    fields: list[str] = []
+    used = 0
+    for f in sorted(dicts):
+        slots = len(dicts[f]) + 1
+        if used + slots <= budget:
+            fields.append(f)
+            used += slots
+    return fields
+
+
+def _field_hll_rollups(table_df, dicts: dict, fields: list[str]) -> dict:
     """Per-(field, dictionary code) HLL sketches of the trail cookies,
-    computed at WRITE time — the sketch analog of :func:`_field_rollups`
+    computed at WRITE time — the sketch analog of the count rollups
     (VERDICT r08 item 1; reference sketch semantics
-    src/hyperloglog.c:256-296).
+    src/hyperloglog.c:256-296).  Used when the sliced sidecar
+    (:func:`_write_hll_slices`) does not apply.
 
     A ``yield cookie to ^h`` uniques query needs, per field value, the
     sketch over {cookie : trail has >= 1 event with that value}.  Sketch
     adds are idempotent, so unlike counters NO ts-uniqueness proof is
     needed (the consecutive-duplicate skip can only drop repeated adds
-    of the same cookie) and the per-value sketch is exactly the
-    register-max over the DISTINCT (value, uuid) pairs — one distinct
-    shuffle, a vectorized murmur3 over the pair stream, and a bounded
-    (fields x codes x 16384) aggregation.  Monoid (register max), so
-    segment manifests merge without rescanning history
+    of the same cookie).  The written table carries the packed
+    (reg, rank) of each row's cookie (``__hll_rr``), so the rollup is
+    ONE whole-stage-codegen aggregation — max(rank) by (field, code,
+    register) — with no distinct pass and no Python hashing; a bounded
+    (fields x codes x 16384) result.  Monoid (register max), so segment
+    manifests merge without rescanning history
     (:func:`_merge_segment_manifests`).
 
     Shape: {field: [hex_sketch_code0, hex_sketch_code1, ...]} in the
@@ -476,35 +436,11 @@ def _field_hll_rollups(
 
     from pyspark.sql import functions as F
 
-    from trck_spark.fsm.hll import Hll
+    from trck_spark.fsm.hll import RR_RANK_BITS, RR_RANK_MASK, Hll
 
-    if not dicts or os.environ.get("TRCK_SPARK_NO_HLL_ROLLUP"):
-        return {}
-    budget = int(
-        os.environ.get(
-            "TRCK_SPARK_HLL_ROLLUP_VALUES_MAX", str(HLL_ROLLUP_VALUES_MAX)
-        )
-    )
-    fields: list[str] = []
-    used = 0
-    for f in sorted(dicts):
-        slots = len(dicts[f]) + 1
-        if used + slots > budget:
-            continue
-        # budget is charged in full sorted order so the admitted set
-        # matches the sliced-sidecar walk; only_fields then restricts
-        # to the fields the sidecar did NOT already cover
-        if only_fields is not None and f not in only_fields:
-            used += slots
-            continue
-        fields.append(f)
-        used += slots
-    if not fields:
-        return {}
     t0 = time.time()
     exploded = table_df.select(
-        F.col(uuid_col).cast("string").alias("u"),
-        *(["__hll_rr"] if "__hll_rr" in table_df.columns else []),
+        HLL_RR_COL,
         F.explode(
             F.array(
                 *[
@@ -519,61 +455,18 @@ def _field_hll_rollups(
             )
         ).alias("p"),
     )
-    if "__hll_rr" in table_df.columns:
-        # the written table already carries the packed (reg, rank) per
-        # row: the rollup is ONE whole-stage-codegen aggregation —
-        # max(rank) by (field, code, register) — with no distinct pass
-        # and no Python hashing at all.  Idempotent register max makes
-        # the raw event stream equivalent to the distinct-pair form.
-        from trck_spark.fsm.hll import RR_RANK_BITS, RR_RANK_MASK
-
-        agg = (
-            exploded.groupBy(
-                F.col("p.f").alias("f"),
-                F.col("p.c").alias("c"),
-                F.shiftright("__hll_rr", RR_RANK_BITS).alias("reg"),
-            )
-            .agg(
-                F.max(
-                    F.col("__hll_rr").bitwiseAND(F.lit(RR_RANK_MASK))
-                ).alias("rank")
-            )
-        ).persist()
-    else:
-        # legacy layout (no materialized register column): distinct
-        # (value, cookie) pairs then a vectorized murmur fold
-        pairs = exploded.select("u", "p.f", "p.c").distinct()
-
-        def _updates(batches):
-            drop_spark_zip_importers()
-            import pandas as pd
-
-            from trck_spark.fsm.hll import (
-                cookie_display_hex,
-                hll_register_updates_vec,
-            )
-
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                disp = [cookie_display_hex(u) for u in pdf["u"]]
-                reg, rank = hll_register_updates_vec(disp)
-                yield pd.DataFrame(
-                    {
-                        "f": pdf["f"].values,
-                        "c": pdf["c"].values,
-                        "reg": reg,
-                        "rank": rank,
-                    }
-                )
-
-        agg = (
-            pairs.mapInPandas(
-                _updates, "f string, c int, reg int, rank int"
-            )
-            .groupBy("f", "c", "reg")
-            .agg(F.max("rank").alias("rank"))
-        ).persist()
+    agg = (
+        exploded.groupBy(
+            F.col("p.f").alias("f"),
+            F.col("p.c").alias("c"),
+            F.shiftright(HLL_RR_COL, RR_RANK_BITS).alias("reg"),
+        )
+        .agg(
+            F.max(
+                F.col(HLL_RR_COL).bitwiseAND(F.lit(RR_RANK_MASK))
+            ).alias("rank")
+        )
+    ).persist()
     try:
         n_rows = agg.count()
         if n_rows > HLL_ROLLUP_ROWS_MAX:
@@ -593,7 +486,8 @@ def _field_hll_rollups(
         sketches[r["f"]][r["c"]].set_register(int(r["reg"]), int(r["rank"]))
     out = {f: [s.to_hex() for s in sk] for f, sk in sketches.items()}
     print(
-        f"# store hll rollups: {len(fields)} fields, {used} sketches "
+        f"# store hll rollups: {len(fields)} fields, "
+        f"{sum(len(sk) for sk in out.values())} sketches "
         f"in {time.time() - t0:.1f}s",
         file=sys.stderr,
     )
@@ -601,17 +495,17 @@ def _field_hll_rollups(
 
 
 def _write_hll_slices(
-    table_df, dicts: dict, ts_col: str, ts_min: int, ts_max: int,
-    path: str,
+    table_df, dicts: dict, fields: list[str], ts_col: str, ts_min: int,
+    ts_max: int, path: str,
 ) -> tuple[dict, dict]:
     """Write the TIME-SLICED sketch sidecar and derive the part-level
     sketch rollups from it.
 
     Returns ({field: {"n", "bounds", "file"}}, {field: [hex by code]})
-    — or ({}, {}) when slicing isn't applicable (no packed register
-    column, degenerate ts span, byte cap).
+    — or ({}, {}) when slicing isn't applicable (sidecar switched off,
+    degenerate ts span, byte cap).
 
-    Each eligible dictionary field gets, per (code, time slice), the
+    Each of ``fields`` (:func:`_hll_fields`) gets, per (code, time slice), the
     register-max sketch of the cookies with >= 1 matching event in that
     slice — the continuous-aggregate layer between the per-segment
     manifest sketch (too coarse when a ts bound lands mid-segment) and
@@ -642,31 +536,10 @@ def _write_hll_slices(
         _rle_encode,
     )
 
-    if (
-        not dicts
-        or "__hll_rr" not in table_df.columns
-        or os.environ.get("TRCK_SPARK_NO_HLL_ROLLUP")
-        or os.environ.get("TRCK_SPARK_NO_HLL_SLICES")
-        or ts_min is None
-        or ts_max is None
-    ):
+    if os.environ.get("TRCK_SPARK_NO_HLL_SLICES"):
         return {}, {}
     W = int(ts_max) - int(ts_min) + 1
-    budget = int(
-        os.environ.get(
-            "TRCK_SPARK_HLL_ROLLUP_VALUES_MAX", str(HLL_ROLLUP_VALUES_MAX)
-        )
-    )
-    fields: list[str] = []
-    used = 0
-    for f in sorted(dicts):
-        slots = len(dicts[f]) + 1
-        if used + slots > budget or "__c_" + f not in table_df.columns:
-            continue
-        fields.append(f)
-        used += slots
-    if not fields:
-        return {}, {}
+    used = sum(len(dicts[f]) + 1 for f in fields)
     byte_cap = int(
         os.environ.get(
             "TRCK_SPARK_HLL_SLICE_BYTES_MAX", str(HLL_SLICE_BYTES_MAX)
@@ -689,7 +562,7 @@ def _write_hll_slices(
         F.coalesce(F.col(ts_col).cast("long"), F.lit(tmin)).alias(
             "__t"
         ),
-        F.col("__hll_rr").alias("__rr"),
+        F.col(HLL_RR_COL).alias("__rr"),
         *[
             F.coalesce(F.col("__c_" + f), F.lit(0)).alias("__c_" + f)
             for f in fields
@@ -1063,6 +936,7 @@ def _open_segmented(spark, path: str, m: dict):
         read_manifest(os.path.join(path, s)) for s in m["segments"]
     ]
     merged = _merge_segment_manifests(all_ms, m)
+    merged["_part_manifests"] = all_ms  # for check_layout
     # per-part filesystem path + sliced-sketch sidecar meta: the
     # ts-scoped uniques tier reads covered slices straight from the
     # boundary part's sidecar and scans only the partial slices
@@ -1161,9 +1035,9 @@ def _open_segmented(spark, path: str, m: dict):
 
 
 def compact_trail_store(spark, src_path: str, dest_path: str):
-    """Rewrite a segmented store (base + N appended segments) into a
-    FRESH single store at ``dest_path`` and return the re-opened frame
-    (VERDICT r07 item 6).
+    """Rewrite a store (single, compacted, or base + N appended
+    segments) into a FRESH single store at ``dest_path`` and return
+    the re-opened frame (VERDICT r07 item 6).
 
     Many appends leave the union-of-segments plan paying per-segment
     scan overhead; compaction bounds segment count while preserving
@@ -1174,7 +1048,9 @@ def compact_trail_store(spark, src_path: str, dest_path: str):
     still survives).  Lexicons, rollups and the per-(uuid, db)
     ts-uniqueness proof are rebuilt over the unified data, restoring
     the dictionary-scan and zero-scan rollup tiers that a long segment
-    chain degrades."""
+    chain degrades.  Being a full rewrite through
+    :func:`write_trail_store`, it is also how a store written in an
+    older layout (see :func:`check_layout`) gains the current one."""
     from pyspark.sql import functions as F
 
     m = read_manifest(src_path)
@@ -1199,101 +1075,6 @@ def compact_trail_store(spark, src_path: str, dest_path: str):
     )
 
 
-def ensure_rollups(spark, path: str) -> dict:
-    """Upgrade a pre-v3 store manifest in place with the per-field
-    rollups, the [ts_min, ts_max] zone map, the cookie-sketch rollups
-    AND — when the stored data already carries the packed ``__hll_rr``
-    register column (r10 layout) — the time-sliced sketch sidecar
-    (one scan each; no data rewrite) and return the manifest.
-
-    On a SEGMENTED store, upgrades the base and every segment (the
-    segmented open merges per-segment rollups value-keyed at read
-    time); the parent manifest itself carries no rollups — a fresh
-    __c_* reference against the code-stripped union would otherwise
-    raise AnalysisException.  The zone-map backfill matters for
-    correctness, not just speed: rollups and zone maps shipped in
-    different revisions at manifest version 3, so a store can carry
-    rollups (the ts-scoped tier's gates pass) but no ts_min/ts_max —
-    the engine then treats the part as boundary (full scan), and this
-    backfill restores the pruning.  The sidecar backfill restores the
-    incremental ts-bounded uniques cost model for stores written
-    between the register column (r10) and the sidecar (r11) without
-    the full rewrite those layouts previously required; stores without
-    the persisted register column keep the legacy boundary scan — the
-    sidecar is only consulted on the rr_fold plan, so writing one
-    there would be dead bytes — and need a rewrite (compaction) to
-    join the tier."""
-    from pyspark.sql import functions as F
-
-    m = read_manifest(path)
-    for seg in m.get("segments", []):
-        ensure_rollups(spark, os.path.join(path, seg))
-    need_rollups = "rollups" not in m
-    need_zone = "ts_min" not in m or "ts_max" not in m
-    need_hll = "hll_rollups" not in m
-    need_slices = (
-        "hll_slices" not in m
-        and bool(m.get("hll_rr_col"))
-        and not os.environ.get("TRCK_SPARK_NO_HLL_ROLLUP")
-        and not os.environ.get("TRCK_SPARK_NO_HLL_SLICES")
-    )
-    if not (need_rollups or need_zone or need_hll or need_slices):
-        return m
-    segmented = bool(m.get("segments"))
-    if segmented:
-        # base data lives in the parent dir's own bucketed table; scan
-        # just that table (NOT the segmented union, whose codes differ)
-        if not spark.catalog.tableExists(_table_name(path)):
-            open_trail_store(spark, path)
-        table_df = spark.table(_table_name(path))
-    else:
-        table_df = open_trail_store(spark, path)
-    if need_rollups:
-        m["rollups"] = _field_rollups(table_df, m.get("dicts") or {})
-    if need_zone:
-        z = table_df.agg(
-            F.min(F.col(m["ts_col"]).cast("long")).alias("tmin"),
-            F.max(F.col(m["ts_col"]).cast("long")).alias("tmax"),
-        ).first()
-        m["ts_min"], m["ts_max"] = z["tmin"], z["tmax"]
-    slice_rollups: dict = {}
-    if need_slices:
-        if m["hll_rr_col"] in table_df.columns:
-            m["hll_slices"], slice_rollups = _write_hll_slices(
-                table_df, m.get("dicts") or {}, m["ts_col"],
-                m.get("ts_min"), m.get("ts_max"), path,
-            )
-        else:
-            # manifest claims hll_rr_col but the table data lacks the
-            # column (ADVICE r11): persist the always-present empty
-            # key (matching write_trail_store) so callers' presence
-            # checks converge instead of re-opening the table and
-            # rewriting the manifest as a perpetual no-op retry
-            m["hll_slices"] = {}
-    if need_hll:
-        # mirror the write path: part-level sketches derive from the
-        # sidecar when it was just written, one extra aggregation
-        # covers only the leftover fields
-        hll_rollups = dict(slice_rollups)
-        leftover = [
-            f for f in (m.get("dicts") or {}) if f not in hll_rollups
-        ]
-        if leftover:
-            hll_rollups.update(
-                _field_hll_rollups(
-                    table_df, m.get("dicts") or {}, m["uuid_col"],
-                    only_fields=None if not hll_rollups else leftover,
-                )
-            )
-        m["hll_rollups"] = hll_rollups
-    m["version"] = 3
-    with open(os.path.join(path, MANIFEST), "w") as f:
-        _dump_manifest(m, f)
-    if not segmented:
-        table_df._trailstore_manifest = m
-    return m
-
-
 def _schema_ddl(df) -> str:
     parts = []
     for field in df.schema.fields:
@@ -1309,6 +1090,35 @@ def read_manifest(path: str) -> dict:
     # second path channel
     m["_path"] = os.path.abspath(path)
     return m
+
+
+# manifest keys the read tiers rely on; write_trail_store writes all of
+# them, stores from older layouts lack some
+LAYOUT_KEYS = ("rollups", "ts_min", "ts_max", "hll_rollups", "hll_slices")
+
+
+def check_layout(manifest: dict) -> None:
+    """Raise ValueError when the opened store, or any of its segments,
+    was written in an older layout than :func:`write_trail_store`
+    writes (missing rollups, zone map, sketches, sidecar meta or the
+    ``__hll_rr`` column).  Reads only the manifests the open already
+    loaded: a single store's own, a segmented store's per-part list.
+    Frames that are not opened stores carry neither and pass."""
+    parts = manifest.get("_part_manifests") or (
+        [manifest] if "_path" in manifest else []
+    )
+    for m in parts:
+        missing = [k for k in LAYOUT_KEYS if k not in m]
+        if m.get("hll_rr_col") != HLL_RR_COL:
+            missing.append("hll_rr_col")
+        if missing:
+            root = parts[0]["_path"]
+            raise ValueError(
+                f"TrailStore {m['_path']!r} was written in an older "
+                f"layout (manifest lacks {', '.join(missing)}); rewrite "
+                f"it in the current layout with: python -m "
+                f"trck_spark.store --compact {root} DEST"
+            )
 
 
 def is_trail_store(path: str) -> bool:
@@ -1375,10 +1185,11 @@ def main(argv=None) -> int:
     p.add_argument(
         "--compact",
         action="store_true",
-        help="SRC is an existing segmented store: rewrite base+segments "
-        "into a fresh single store at DEST (byte-identical query "
-        "results via the persisted __db0 segment index; unified "
-        "lexicons/rollups restore the zero-scan tiers)",
+        help="SRC is an existing store: rewrite it (base and any "
+        "segments) into a fresh single store at DEST in the current "
+        "layout (byte-identical query results via the persisted __db0 "
+        "segment index; unified lexicons/rollups restore the zero-scan "
+        "tiers)",
     )
     args = p.parse_args(argv)
 

@@ -50,56 +50,40 @@ STATE_SCHEMA = "blob binary"
 STREAM_END_TS = (1 << 63) - 1
 
 # Versioned per-trail state blob.  v2 = dict layout {"v", "ms", "ts",
-# "eff", "prev"}; pre-versioning checkpoints pickled bare tuples
-# ((machine_states, last_ts) then (machine_states, last_ts, eff)) —
-# _load_state migrates both instead of crashing the executor with an
-# opaque unpack ValueError on resume-from-old-checkpoint.
+# "eff", "prev"[, "he2"]}; _load_state rejects any other blob with an
+# error naming the fix instead of crashing the executor with an opaque
+# unpack ValueError on resume-from-old-checkpoint.
 _STATE_VERSION = 2
 
 # Versioned BUCKET state blob (r12 secondary grouping): {"bv": 3,
-# "nb": state_buckets width (absent in older blobs),
-# "t": {skey: v2 trail blob}, "dl": {skey: deadline_ms},
-# "pt": {skey: last_data_ms}} — one blob per hash(uuid)%N bucket, each
-# trail's entry the unchanged v2 per-trail layout.  Distinguished from
-# v2 blobs by the "bv" key, so per-trail-grouping checkpoints migrate
-# in place when buckets are disabled.
+# "nb": state_buckets width, "t": {skey: v2 trail blob},
+# "dl": {skey: deadline_ms}, "pt": {skey: last_data_ms}} — one blob per
+# hash(uuid)%N bucket, each trail's entry the unchanged v2 per-trail
+# layout.  Distinguished from v2 blobs by the "bv" key, so
+# per-trail-grouping checkpoints resume when buckets are disabled.
 _BUCKET_STATE_VERSION = 3
 
 
 def _load_state(blob) -> tuple[dict, Any, Any, Any, set]:
     """state blob -> (machine_states, last_ts, eff, prev_event,
-    hll_emitted), migrating pre-versioning tuple layouts (prev_event /
-    eff default None; ``he`` — the emit-once set for cookie-only sketch
-    yields, r10 — is an OPTIONAL v2 key so older checkpoints resume
-    cleanly with an empty set)."""
+    hll_emitted).  ``he2`` — the emit-once set for cookie-only sketch
+    yields — is written only when non-empty."""
     data = pickle.loads(bytes(blob))
-    if isinstance(data, dict):
-        v = data.get("v")
-        if v != _STATE_VERSION:
-            raise ValueError(
-                f"streaming state version {v!r} is newer than this build "
-                f"supports ({_STATE_VERSION}); upgrade trck_spark or "
-                "restart the query from a fresh checkpoint"
-            )
-        he: set = set()
-        if data.get("he2"):
-            import numpy as np
+    v = data.get("v") if isinstance(data, dict) else None
+    if v != _STATE_VERSION or "he" in data:
+        raise ValueError(
+            f"streaming state blob (version {v!r}) is not the v"
+            f"{_STATE_VERSION} layout this build reads; restart the "
+            "query from a fresh checkpoint"
+        )
+    he: set = set()
+    if data.get("he2"):
+        import numpy as np
 
-            for var, blob in data["he2"].items():
-                for ti in np.frombuffer(blob, "<i4"):
-                    he.add((int(ti), var))
-        elif data.get("he"):
-            he = {(int(ti), var) for ti, var in data["he"]}
-        return data["ms"], data["ts"], data["eff"], data["prev"], he
-    if isinstance(data, tuple) and len(data) == 2:
-        return data[0], data[1], None, None, set()
-    if isinstance(data, tuple) and len(data) == 3:
-        return data[0], data[1], data[2], None, set()
-    raise ValueError(
-        "unrecognized streaming state blob (not a v2 dict or a known "
-        "legacy tuple layout); the checkpoint was not written by "
-        "trck_spark.streaming"
-    )
+        for var, blob in data["he2"].items():
+            for ti in np.frombuffer(blob, "<i4"):
+                he.add((int(ti), var))
+    return data["ms"], data["ts"], data["eff"], data["prev"], he
 
 
 def _dump_state(machine_states, last_ts, eff, prev_event,
@@ -130,10 +114,10 @@ def _dump_state(machine_states, last_ts, eff, prev_event,
 
 def _load_bucket_state(raw: bytes, n_buckets: int):
     """bucket blob -> (trails, dl, pt), or None when ``raw`` is a
-    per-trail (v2/legacy) blob.  Raises ValueError when the blob was
-    written under a different ``state_buckets`` width: trails would
-    now hash to other buckets and their state would be stranded.
-    Blobs written before the width was recorded load unchecked."""
+    per-trail (v2) blob.  Raises ValueError when the blob was written
+    under a different ``state_buckets`` width, or before the width was
+    recorded: trails would hash to other buckets and their state would
+    be stranded."""
     data = pickle.loads(raw)
     if not (isinstance(data, dict) and "bv" in data):
         return None
@@ -144,7 +128,13 @@ def _load_bucket_state(raw: bytes, n_buckets: int):
             "upgrade trck_spark or restart from a fresh checkpoint"
         )
     nb = data.get("nb")
-    if nb is not None and nb != n_buckets:
+    if nb is None:
+        raise ValueError(
+            "streaming checkpoint predates the recorded state_buckets "
+            f"width, so a resume at state_buckets={n_buckets} cannot be "
+            "checked against it; restart from a fresh checkpoint"
+        )
+    if nb != n_buckets:
         raise ValueError(
             f"streaming checkpoint was written with state_buckets={nb}"
             f", this query runs with state_buckets={n_buckets}; resume "
@@ -404,10 +394,11 @@ def streaming_partials(
     inside the step, amortizing applyInPandasWithState's fixed
     per-group cost over bucket-many trails (identical results: state,
     dedup scoping and finalization deadlines stay per-trail inside the
-    bucket blob).  Default (None): ``TRCK_SPARK_STREAM_BUCKETS`` or
-    ``max(32, 4 x defaultParallelism)``.  Pass 0 to group per trail
-    (required to RESUME a pre-bucketing checkpoint: its state keys are
-    uuids, which only the per-trail grouping can address).
+    bucket blob).  Default (None): ``max(32, 4 x defaultParallelism)``.
+    A checkpoint must resume under the width it was written with (a
+    different one raises).  Pass 0 to group per trail (required to
+    RESUME a pre-bucketing checkpoint: its state keys are uuids, which
+    only the per-trail grouping can address).
 
     foreach_values: for implicit-foreach programs the lexicon cannot be
     computed from an unbounded stream; pass the value list explicitly.
@@ -669,23 +660,18 @@ def streaming_partials(
     # per-trail layout).  Trails with no events in a batch pass
     # through as opaque pre-pickled bytes — no per-trail
     # re-(de)serialization.  N scales with the session's parallelism
-    # (guide §2.2) and is env/kwarg-overridable; 0 restores per-trail
+    # (guide §2.2) and is kwarg-overridable; 0 restores per-trail
     # grouping (pre-bucketing checkpoints resume there via the
-    # v2-blob migration in the step).
+    # v2-blob branch in the step).
     n_buckets = state_buckets
     if n_buckets is None:
-        envv = os.environ.get("TRCK_SPARK_STREAM_BUCKETS")
-        if envv is not None:
-            n_buckets = int(envv)
-        else:
-            try:
-                n_buckets = 4 * int(
-                    events_sdf.sparkSession.sparkContext
-                    .defaultParallelism
-                )
-            except Exception:
-                n_buckets = 32
-            n_buckets = max(32, n_buckets)
+        try:
+            n_buckets = 4 * int(
+                events_sdf.sparkSession.sparkContext.defaultParallelism
+            )
+        except Exception:
+            n_buckets = 32
+        n_buckets = max(32, n_buckets)
     bucketed = bool(n_buckets) and int(n_buckets) > 0
     # stamped into every bucket blob: a resume under a different width
     # would hash trails to other buckets and strand their state
@@ -700,8 +686,7 @@ def streaming_partials(
         # ---- bucket state: {skey: v2 trail blob} + per-trail timer
         # maps.  skey = uuid ((uuid, entry) under a window_df); the
         # inner blobs are exactly the per-trail v2 layout
-        # (_dump_state), so per-trail semantics and checkpoint
-        # migrations are unchanged.
+        # (_dump_state), so per-trail semantics are unchanged.
         trails: dict = {}
         dl: dict = {}  # event-time finalize deadline (ms) per trail
         pt: dict = {}  # processing-time last-data stamp (ms) per trail
@@ -712,8 +697,8 @@ def streaming_partials(
                 trails, dl, pt = loaded
             else:
                 # pre-bucketing checkpoint (per-trail grouping mode):
-                # the whole blob is ONE v2/legacy trail keyed by the
-                # group key itself
+                # the whole blob is ONE v2 trail keyed by the group
+                # key itself
                 sk0 = tuple(key) if has_window else key[0]
                 trails = {sk0: raw0}
                 if use_event_time:
