@@ -36,36 +36,6 @@ def test_simhash_pairs(spark):
         assert r["a"] < r["b"]
 
 
-def test_cosine_lsh_subset(spark):
-    """Bucketed ANN returns <= k rows per query with valid scores."""
-    from trck_spark.pipeline.similarity import cosine_topk_lsh
-
-    rows = cosine_topk_lsh(spark, SF_DIR, k=5).collect()
-    per_q: dict = {}
-    for r in rows:
-        per_q.setdefault(r["qid"], []).append(r["score_e6"])
-        assert -1_000_001 <= r["score_e6"] <= 1_000_001
-    for scores in per_q.values():
-        assert len(scores) <= 5
-
-
-def test_ivf_recall(spark):
-    """IVF top-k must recall most of the exact top-k at this scale."""
-    from trck_spark.pipeline.similarity import cosine_topk, cosine_topk_ivf
-
-    exact = {
-        (r["qid"], r["did"])
-        for r in cosine_topk(spark, SF_DIR, k=5, n_queries=20).collect()
-    }
-    ivf = {
-        (r["qid"], r["did"])
-        for r in cosine_topk_ivf(spark, SF_DIR, k=5, n_queries=20).collect()
-    }
-    assert len(ivf) > 0
-    recall = len(ivf & exact) / len(exact)
-    assert recall >= 0.5, f"IVF recall too low: {recall}"
-
-
 def test_ngram_hot_shingle_cap(spark, tmp_path):
     """A shingle shared by every doc must not explode into O(n^2)
     candidate pairs: with df > max_shingle_df it is dropped from counts
@@ -103,27 +73,6 @@ def test_ngram_hot_shingle_cap(spark, tmp_path):
     assert pairs[(40, 41)] == 800000
 
 
-def test_cosine_ivf_pivot_recall(spark):
-    """Deterministic pivot-cell IVF must keep good recall vs the exact
-    top-k at n_probe/n_cells = 4/16."""
-    from trck_spark.pipeline.similarity import (
-        cosine_topk,
-        cosine_topk_ivf_pivot,
-    )
-
-    exact = {
-        (r["qid"], r["did"])
-        for r in cosine_topk(spark, SF_DIR, k=5, n_queries=5).collect()
-    }
-    piv = {
-        (r["qid"], r["did"])
-        for r in cosine_topk_ivf_pivot(
-            spark, SF_DIR, k=5, n_queries=5
-        ).collect()
-    }
-    assert len(piv & exact) / len(exact) >= 0.8
-
-
 def test_embedding_near_dup_recall(spark):
     """Banded-LSH near-dup pairs must be a subset of the exact cosine
     pair set (verification is exact), with high recall at this
@@ -131,7 +80,7 @@ def test_embedding_near_dup_recall(spark):
     from pyspark.sql import functions as F
 
     from trck_spark.pipeline.dedup import embedding_near_dup_pairs
-    from trck_spark.pipeline.similarity import _DOT, QUANT
+    from trck_spark.pipeline.dedup import _DOT, QUANT
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").select(
         "vec_id", F.expr(QUANT).alias("v")
@@ -185,35 +134,6 @@ def test_dedup_clusters_invariants(spark):
     assert sum(len(m) for m in by_cluster.values()) == len(labels)
 
 
-def test_quota_sample_group_limit_plan(spark):
-    """The rank filter must compile to a map-side (Partial)
-    WindowGroupLimit so the stratum shuffle carries O(strata x N) rows,
-    not the corpus — the property that makes deterministic quota
-    sampling viable at 100 TB."""
-    from trck_spark.pipeline.curation import quota_sample
-
-    df = quota_sample(spark, SF_DIR, per_source=10)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "WindowGroupLimit" in plan and "Partial" in plan
-    rows = df.collect()
-    per_source: dict = {}
-    for r in rows:
-        per_source.setdefault(r["source"], []).append(r["rk"])
-    for rks in per_source.values():
-        assert sorted(rks) == list(range(1, len(rks) + 1))
-        assert len(rks) <= 10
-
-
-def test_contamination_bounds(spark):
-    from trck_spark.pipeline.curation import contamination_check
-
-    rows = contamination_check(spark, SF_DIR, n_eval=100).collect()
-    for r in rows:
-        assert r["doc_id"] >= 100
-        assert 1 <= r["n_shared"] <= r["n_shingles"]
-        assert 0 < r["overlap_e6"] <= 1_000_000
-
-
 def test_connected_components_chain_log_rounds(spark):
     """A 200-node path graph converges in O(log diameter) rounds thanks
     to the pointer-jumping shortcut — propagation alone would need 199
@@ -232,30 +152,6 @@ def test_connected_components_chain_log_rounds(spark):
     got = {r["doc_id"]: r["cluster_id"] for r in labels.collect()}
     assert got == {i: 0 for i in range(n)}
     assert rounds <= 12, f"pointer jumping should converge fast, took {rounds}"
-
-
-def test_mixture_sample_rates(spark):
-    """Hash-fraction sampling keeps ~rate of each stratum (uniformity of
-    the md5 fraction) and applies the default rate to unlisted sources."""
-    from trck_spark.pipeline.curation import mixture_sample
-
-    rates = {"src0": 0.8, "src1": 0.0}
-    out = mixture_sample(spark, SF_DIR, rates=rates, default_rate=0.3)
-    kept: dict = {}
-    for r in out.collect():
-        kept[r["source"]] = kept.get(r["source"], 0) + 1
-    total = {
-        r["source"]: r["n"]
-        for r in spark.read.parquet(f"{SF_DIR}/documents.parquet")
-        .groupBy("source").count().withColumnRenamed("count", "n")
-        .collect()
-    }
-    assert kept.get("src1", 0) == 0  # rate 0 keeps nothing
-    f0 = kept["src0"] / total["src0"]
-    assert 0.5 < f0 <= 1.0, f0  # ~0.8 of ~25 docs, wide tolerance
-    others = sum(v for k, v in kept.items() if k not in rates)
-    n_others = sum(v for k, v in total.items() if k not in rates)
-    assert 0.1 < others / n_others < 0.55  # ~0.3
 
 
 def test_containment_catches_subset_dup(spark, tmp_path):
@@ -293,31 +189,6 @@ def test_containment_catches_subset_dup(spark, tmp_path):
     assert jrows == []  # Jaccard misses the subset duplicate
 
 
-def test_sequence_pack_invariants(spark):
-    """Per shard: offsets are contiguous (each doc starts where the
-    previous ended), bins cover [start, start+n_tokens-1] at budget 512,
-    and every doc appears exactly once."""
-    from trck_spark.pipeline.curation import sequence_pack
-
-    out = sequence_pack(spark, SF_DIR, budget=512, n_shards=8).collect()
-    n_docs = (
-        spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
-    )
-    assert len(out) == n_docs
-    by_shard: dict = {}
-    for r in out:
-        by_shard.setdefault(r["shard"], []).append(r)
-    assert set(by_shard) <= set(range(8))
-    for rows in by_shard.values():
-        rows.sort(key=lambda r: r["start_offset"])
-        pos = 0
-        for r in rows:
-            assert r["start_offset"] == pos
-            assert r["bin_first"] == pos // 512
-            assert r["bin_last"] == (pos + r["n_tokens"] - 1) // 512
-            pos += r["n_tokens"]
-
-
 def _write_docs(spark, tmp_path, rows, name="docs"):
     from pyspark.sql import functions as F
 
@@ -333,8 +204,7 @@ def _write_docs(spark, tmp_path, rows, name="docs"):
 
 def _oracle_rows(sql, sf_dir, table="documents"):
     """Run an oracle SQL string on a planted fixture dir via DuckDB —
-    parity on ADVERSARIAL fixtures, not just the synthetic corpus
-    (whose text, e.g., contains zero PII hits)."""
+    parity on ADVERSARIAL fixtures, not just the synthetic corpus."""
     import duckdb
 
     con = duckdb.connect()
@@ -349,45 +219,6 @@ def _spark_vs_oracle(df, sql, sf_dir, table="documents"):
     got = sorted(tuple(r) for r in df.collect())
     want = sorted(tuple(r) for r in _oracle_rows(sql, sf_dir, table))
     assert got == want, (got[:5], want[:5])
-
-
-def test_pii_planted(spark, tmp_path):
-    """Planted PII is counted per pattern and the redaction matches a
-    Python re.sub applying the same patterns in the same order."""
-    import hashlib
-    import re
-
-    from trck_spark.pipeline.text import _PII_PATTERNS, pii_stats
-
-    t0 = ("contact bob@example.com or alice.smith+x@mail.co, "
-          "call 555-123-4567, ssn 123-45-6789, host 10.0.0.1 ok")
-    t1 = "no pii here at all"
-    d = _write_docs(spark, tmp_path, [(0, t0), (1, t1)], "pii")
-
-    rows = {r["doc_id"]: r for r in pii_stats(spark, d).collect()}
-    assert rows[0]["n_email"] == 2
-    assert rows[0]["n_phone"] == 1
-    assert rows[0]["n_ssn"] == 1
-    assert rows[0]["n_ipv4"] == 1
-    assert rows[0]["n_pii"] == 5
-    assert rows[1]["n_pii"] == 0
-
-    red = t0
-    for _name, tok, pat in _PII_PATTERNS:
-        red = re.sub(pat, tok, red)
-    assert "bob@example.com" not in red and "<EMAIL>" in red
-    assert rows[0]["redacted_md5"] == hashlib.md5(
-        red.encode()
-    ).hexdigest()
-    assert rows[1]["redacted_md5"] == hashlib.md5(
-        t1.encode()
-    ).hexdigest()
-
-    # DuckDB oracle must agree on NON-ZERO hits too (the synthetic
-    # corpus has none, so the registered parity check never sees any)
-    from trck_spark.pipeline.text import pii_stats_oracle_sql
-
-    _spark_vs_oracle(pii_stats(spark, d), pii_stats_oracle_sql(), d)
 
 
 def test_dup_span_planted(spark, tmp_path):
@@ -415,28 +246,6 @@ def test_dup_span_planted(spark, tmp_path):
     _spark_vs_oracle(
         dup_span_stats(spark, d), dup_span_stats_oracle_sql(), d
     )
-
-
-def test_tfidf_planted(spark, tmp_path):
-    """tf x linear-idf ranking on a 2-doc corpus: doc-specific terms
-    outrank corpus-wide ones; scores are the exact integer formula."""
-    from trck_spark.pipeline.text import tfidf_topterms
-
-    d = _write_docs(
-        spark, tmp_path,
-        [(0, "apple apple banana"), (1, "banana cherry")],
-        "tfidf",
-    )
-    rows = tfidf_topterms(spark, d, k=3).collect()
-    by_doc: dict = {}
-    for r in rows:
-        by_doc.setdefault(r["doc_id"], []).append(
-            (r["rk"], r["term"], r["score_e6"])
-        )
-    # N=2; doc0: apple tf=2 df=1 -> 4e6; banana tf=1 df=2 -> 1e6
-    assert by_doc[0] == [(1, "apple", 4_000_000), (2, "banana", 1_000_000)]
-    # doc1: cherry tf=1 df=1 -> 2e6; banana -> 1e6
-    assert by_doc[1] == [(1, "cherry", 2_000_000), (2, "banana", 1_000_000)]
 
 
 def test_semantic_dedup_planted(spark, tmp_path):
@@ -474,41 +283,22 @@ def test_semantic_dedup_planted(spark, tmp_path):
     release(out2)
 
 
-def test_dup_span_and_tfidf_single_explode_pipeline(spark):
+def test_dup_span_single_explode_pipeline(spark):
     """Corpus-wide totals must ride a window over the one aggregated
     lineage, NOT a groupBy + self-join: the join form plans the
     scan->explode->aggregate pipeline twice (the join's implied
     isnotnull filter defeats exchange-reuse canonicalization), doubling
     the dominant stage at 100 TB.  Pinned: exactly one Generate
-    (explode) in each executed plan."""
+    (explode) in the executed plan."""
     from trck_spark.pipeline.dedup import dup_span_stats
-    from trck_spark.pipeline.text import tfidf_topterms
 
-    for df in (dup_span_stats(spark, SF_DIR),
-               tfidf_topterms(spark, SF_DIR)):
-        df.collect()  # AQE: final plan only materializes after execution
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        # toString prints "== Final Plan ==" then "== Initial Plan ==";
-        # only the executed (final) section counts
-        final = plan.split("== Initial Plan ==")[0]
-        assert final.count("Generate explode") == 1, final[:2000]
-
-
-def test_session_features_matches_fsm_sessions(spark):
-    """The relational session_features table must agree with the trck
-    FSM sessionization on the same 30-minute gap rule: total session
-    rows == the FSM's $sessions counter, and per-session invariants
-    hold."""
-    from trck_spark.queries import q_session_features, q_trck_sessions
-
-    feats = q_session_features(spark, SF_DIR).collect()
-    fsm_total = q_trck_sessions(spark, SF_DIR).collect()[0]["sessions"]
-    assert len(feats) == fsm_total
-    for r in feats:
-        assert r["n_events"] >= 1
-        assert r["duration_s"] >= 0
-        assert r["duration_s"] < 100 * 86400
-        assert r["n_clicks"] <= r["n_events"]
+    df = dup_span_stats(spark, SF_DIR)
+    df.collect()  # AQE: final plan only materializes after execution
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    # toString prints "== Final Plan ==" then "== Initial Plan ==";
+    # only the executed (final) section counts
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("Generate explode") == 1, final[:2000]
 
 
 def test_incremental_dedup_planted(spark, tmp_path):
@@ -546,70 +336,16 @@ def test_incremental_dedup_planted(spark, tmp_path):
     )
 
 
-def test_hash_split_stability(spark):
-    """Split assignment is a pure function of doc_id: stable across
-    invocations and partitionings, and the bucket histogram respects the
-    requested percentages within coarse tolerance."""
-    from trck_spark.pipeline.curation import hash_split
-
-    a = {r["doc_id"]: r["split"] for r in hash_split(spark, SF_DIR).collect()}
-    b = {
-        r["doc_id"]: r["split"]
-        for r in hash_split(spark, SF_DIR, val_pct=1, test_pct=1).collect()
-    }
-    assert a == b
-    n = len(a)
-    frac_train = sum(1 for v in a.values() if v == "train") / n
-    assert frac_train > 0.9  # 98% requested; tiny-sample tolerance
-
-
-def test_lm_score_planted(spark, tmp_path):
-    """Hand-computed Laplace bigram scores on a 3-doc corpus: the
-    reference slice is doc 0 ('a b a b'), so c1 = {a:2, b:2}, V = 2,
-    c2 = {(a,b):2, (b,a):1}.  Scores (integer e6):
-      (a,b): 1e6*3 // 4 = 750000   (b,a): 1e6*2 // 4 = 500000
-      (b,b): 1e6*1 // 4 = 250000   (c,a): 1e6*1 // (0+2) = 500000
-    """
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from trck_spark.pipeline.text import lm_score
-
-    pq.write_table(
-        pa.table({
-            "doc_id": pa.array([0, 1, 2], pa.int64()),
-            "text": pa.array(["a b a b", "b b c a", "x"]),
-            "source": pa.array(["src0", "src1", "src1"]),
-        }),
-        str(tmp_path / "documents.parquet"),
-    )
-    rows = {r["doc_id"]: r for r in lm_score(spark, str(tmp_path)).collect()}
-    # doc 0: bigrams (a,b),(b,a),(a,b) -> (750000+500000+750000)//3
-    assert rows[0]["lm_bigrams"] == 3
-    assert rows[0]["lm_score_e6"] == 2000000 // 3
-    # doc 1: (b,b),(b,c),(c,a) -> b,c unseen bigram: 1e6*1//(2+2)=250000
-    assert rows[1]["lm_bigrams"] == 3
-    assert rows[1]["lm_score_e6"] == (250000 + 250000 + 500000) // 3
-    # doc 2: single token -> no bigrams, score 0
-    assert rows[2]["lm_bigrams"] == 0 and rows[2]["lm_score_e6"] == 0
-    # empty reference slice: raise loudly instead of silently scoring
-    # everything 0 via non-ANSI DIV-by-zero null (ADVICE r05)
-    import pytest as _pytest
-
-    with _pytest.raises(Exception, match="reference slice is empty"):
-        lm_score(spark, str(tmp_path), ref_source="no_such_source").collect()
-
-
 def test_short_docs_survive_all_operators(spark, tmp_path):
-    """Documents with 0/1/2 words must not crash any shingle- or
-    bigram-based operator.  Regression: Spark's sequence(1, 0) yields
+    """Documents with 0/1/2 words must not crash any shingle-based
+    operator.  Regression: Spark's sequence(1, 0) yields
     the DESCENDING array [1, 0] (unlike SQL generate_series, which is
     empty), so the un-guarded shingle window indexed out of bounds on
     any real-world corpus containing a short document."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from trck_spark.pipeline import curation, dedup, text
+    from trck_spark.pipeline import dedup
 
     pq.write_table(
         pa.table({
@@ -637,8 +373,6 @@ def test_short_docs_survive_all_operators(spark, tmp_path):
         lambda: dedup.minhash_lsh_pairs(spark, d).collect(),
         lambda: dedup.simhash_pairs(spark, d).collect(),
         lambda: dedup.dup_span_stats(spark, d).collect(),
-        lambda: curation.contamination_check(spark, d, n_eval=2).collect(),
-        lambda: text.lm_score(spark, d).collect(),
     ):
         fn()  # must not raise
     # the exact-dup pair (docs 4, 5) must still be found end-to-end

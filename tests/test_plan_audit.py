@@ -95,8 +95,6 @@ def _read_schemas(plan: str, table: str):
 
 # queries that legitimately consume (almost) the whole documents row
 _WIDE_OK = {
-    "quota_sample",      # doc_id, source + rank hash
-    "mixture_sample",    # doc_id, source
     "dedup_apply",       # doc_id, source, n_chars + text for pairs
     "incremental_dedup", # doc_id, source, text
 }
@@ -139,14 +137,9 @@ _SRC_ROOT = os.path.join(os.path.dirname(__file__), "..", "trck_spark")
 
 # (basename, broadcast argument prefix) -> why the input is bounded
 _BROADCAST_WHITELIST = {
-    ("curation.py", "evl"): "eval-set shingles: eval suite is a constant",
     ("dedup.py", "bloom"): "bloom words: geometry-capped (~m/64 rows), "
                            "manifest-gated off beyond ~1e8 fingerprints",
     ("dedup.py", "piv"): "sqrt(N) pivot set, documented ceiling",
-    ("similarity.py", "q"): "query vectors: request-sized",
-    ("similarity.py", "centers"): "n_centers constant",
-    ("similarity.py", "piv"): "n_cells constant / sqrt(N)",
-    ("text.py", "n_docs"): "single-row scalar",
     ("engine.py", "excl_df"): "side-input exclude list, file-sized",
     ("engine.py", "w_df"): "side-input window file, file-sized",
     ("streaming.py", "w_df"): "measured-count gate: broadcast only when "
@@ -186,9 +179,7 @@ def test_no_unjustified_forced_broadcast_in_source():
 # queries whose analyzed plan legitimately carries broadcast hints —
 # every hint inside them resolves to a whitelisted bounded input above
 _HINTED_QUERIES_OK = {
-    "ann_cosine_methods",  # query-vector / pivot / centers broadcasts
-    "knn_label_vote", "semantic_dedup", "contamination_check",
-    "tfidf_topterms",
+    "semantic_dedup",  # sqrt(N) pivot set
     "incremental_dedup",  # store leg's bloom sidecar (geometry-capped)
     # trck engine queries: grid / lexicon / side-input broadcasts
     *{n for n in _QUERIES if n.startswith("trck_")},

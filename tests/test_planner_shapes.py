@@ -22,6 +22,8 @@ from trck_spark.queries import (
 )
 from trck_spark.runner import TrckQuery
 
+SF_DIR = os.environ.get("ORACLE_SF_DIR", "/root/testdata/sf0.001")
+
 
 def test_shapes_recognized():
     assert is_gap_sessions_program(TrckQuery(PROG_SESSIONS).program)
@@ -77,6 +79,23 @@ def test_sessions_micro_with_duplicates(spark):
     df = trails_json_to_df(spark, trails)
     fast, slow = _both(spark, df, PROG_SESSIONS)
     assert fast == slow == {"$sessions": 3}
+
+
+def test_session_features_matches_fsm_sessions(spark):
+    """The relational session_features table must agree with the trck
+    FSM sessionization on the same 30-minute gap rule: total session
+    rows == the FSM's $sessions counter, and per-session invariants
+    hold."""
+    from trck_spark.queries import q_session_features, q_trck_sessions
+
+    feats = q_session_features(spark, SF_DIR).collect()
+    fsm_total = q_trck_sessions(spark, SF_DIR).collect()[0]["sessions"]
+    assert len(feats) == fsm_total
+    for r in feats:
+        assert r["n_events"] >= 1
+        assert r["duration_s"] >= 0
+        assert r["duration_s"] < 100 * 86400
+        assert r["n_clicks"] <= r["n_events"]
 
 
 def test_bounce_micro(spark):

@@ -369,10 +369,9 @@ def _shingle_hashes(spark, sf_dir: str, hash_mode: str = "xxhash64"):
     shipped md5 as the only path and paid +65% on the minhash bench).
 
     h32 feeds the MinHash permutations (32-bit domain: md5's first 8
-    hex chars, or xxhash64's low 32 bits); h64 is the verification /
-    contamination shingle id (60-bit md5 prefix, or the full xxhash64
-    — collision mass negligible either way).  One shingling+hash pass
-    serves both consumers."""
+    hex chars, or xxhash64's low 32 bits); h64 is the verification
+    shingle id (60-bit md5 prefix, or the full xxhash64 — collision
+    mass negligible either way).  One shingling+hash pass serves both."""
     from pyspark.sql import functions as F
 
     sh = shingle_df(spark, sf_dir)
@@ -829,6 +828,40 @@ def simhash_pairs(spark, sf_dir: str, max_hamming: int = 3,
     return out
 
 
+# Embeddings are scored quantized to int64 (round(x * 1e6)): integer dot
+# products and norms are exact, so Spark and the DuckDB oracle produce
+# bit-identical doubles regardless of summation order — float
+# accumulation order can never flip a candidate across the threshold.
+QUANT = ("transform(embedding, x -> "
+         "CAST(round(CAST(x AS DOUBLE) * 1000000) AS BIGINT))")
+_DOT = (
+    "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
+)
+
+
+def _quantized(spark, sf_dir: str):
+    from pyspark.sql import functions as F
+
+    return spread_input(
+        spark, spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    ).select("vec_id", F.expr(QUANT).alias("v"))
+
+
+def _lsh_planes(n_planes: int, dim: int):
+    """Deterministic integer hyperplane weights (standard normals scaled
+    by 1e6 and rounded).  Integer projections over the quantized
+    embeddings are order-free exact sums, so bucket assignment is
+    bit-identical on every engine — the property that lets the DuckDB
+    oracle reproduce the whole LSH pipeline (max |term| ~3e12, dim
+    terms: far inside int64)."""
+    import numpy as np
+
+    rng = np.random.RandomState(7)
+    return np.round(
+        rng.standard_normal((n_planes, dim)) * 1_000_000
+    ).astype(np.int64)
+
+
 def embedding_near_dup_pairs(
     spark,
     sf_dir: str,
@@ -841,7 +874,7 @@ def embedding_near_dup_pairs(
     """Embedding-cosine near-duplicate pairs via banded random-hyperplane
     LSH: vectors agreeing with a candidate on ANY band's full sign
     pattern are verified with an exact cosine over the int64-quantized
-    embeddings (see similarity.py — integer dots are order-free exact, so
+    embeddings (see QUANT — integer dots are order-free exact, so
     the DuckDB oracle reproduces the whole pipeline bit-for-bit).
 
     Scale shape: one projection pass computes all band signatures, the
@@ -864,8 +897,6 @@ def embedding_near_dup_pairs(
     to need it (parquet-footer count, see _CAP_GATE_MIN_BAND_ROWS).
     """
     from pyspark.sql import functions as F
-
-    from trck_spark.pipeline.similarity import _DOT, QUANT, _lsh_planes
 
     if max_band_bucket == "auto":
         n_vecs = _table_rows(spark, f"{sf_dir}/embeddings.parquet")
@@ -1570,9 +1601,9 @@ def semantic_dedup(
     lower-id cell-mate with cosine >= threshold (dup_of = the smallest
     such partner; kept rows carry NULL).
 
-    Cells are the deterministic pivot assignment shared with
-    ``cosine_topk_ivf_pivot`` (first n_cells vectors as centroids,
-    exact integer squared distance over the 1e6-quantized embeddings),
+    Cells are a deterministic pivot assignment (first n_cells vectors
+    as centroids, exact integer squared distance over the 1e6-quantized
+    embeddings),
     so the whole operator — assignment, pairing, cosine, verdict — is
     bit-reproducible in the DuckDB oracle.
 
@@ -1589,8 +1620,6 @@ def semantic_dedup(
     """
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
-
-    from trck_spark.pipeline.similarity import _DOT, _quantized
 
     emb = _quantized(spark, sf_dir)
     piv = emb.filter(F.col("vec_id") < n_cells).select(
